@@ -349,11 +349,13 @@ object ImageCodecs {
       (b(pos) & 0xff) match {
         case 0x21 => // extension: label + sub-blocks
           pos += 2
+          require(pos < b.length, "gif: truncated extension")
           var sz = b(pos) & 0xff
           while (sz != 0) { pos += 1 + sz; require(pos < b.length, "gif: truncated extension"); sz = b(pos) & 0xff }
           pos += 1
         case 0x3b => throw new IllegalArgumentException("gif: trailer before image data")
         case 0x2c =>
+          require(pos + 10 <= b.length, "gif: truncated image descriptor")
           val iw = u16(pos + 5); val ih = u16(pos + 7)
           val iflags = b(pos + 9) & 0xff
           pos += 10
@@ -367,6 +369,7 @@ object ImageCodecs {
           }
           require(table != null, "gif: no color table")
           val interlaced = (iflags & 0x40) != 0
+          require(pos + 1 < b.length, "gif: truncated image data")
           val minCode = b(pos) & 0xff; pos += 1
           require(minCode >= 2 && minCode <= 11, s"gif: bad LZW min code size $minCode")
           // concatenate data sub-blocks

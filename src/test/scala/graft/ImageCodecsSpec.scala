@@ -205,6 +205,21 @@ class ImageCodecsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](ImageCodecs.decode(badMagic))
   }
 
+  test("GIF truncated inside an extension or the image descriptor throws the typed error") {
+    val plain = ImageCodecs.encodeGif(img(10, 8, 2))
+    // splice a graphic control extension between the global color
+    // table and the image descriptor, so cuts land inside its sub-blocks
+    val gctEnd = 13 + 3 * (2 << (plain(10) & 7))
+    val gce = Array(0x21, 0xf9, 0x04, 0, 0, 0, 0, 0).map(_.toByte)
+    val gif = plain.take(gctEnd) ++ gce ++ plain.drop(gctEnd)
+    assert(ImageCodecs.decode(gif).rgb.sameElements(ImageCodecs.decode(plain).rgb))
+    // every cut before the block terminator must fail typed, never AIOOBE
+    for (n <- 0 until gif.length - 1) {
+      val e = intercept[Exception](ImageCodecs.decode(java.util.Arrays.copyOfRange(gif, 0, n)))
+      assert(e.isInstanceOf[IllegalArgumentException], s"cut at $n: $e")
+    }
+  }
+
   test("truncated payloads and unknown magic fail loudly") {
     val good = ImageCodecs.encodePpm(img(4, 4))
     intercept[IllegalArgumentException] {

@@ -62,6 +62,51 @@ class SparkSpec extends AnyFunSuite {
     assert(brute.nonEmpty)
   }
 
+  test("rule-routed xy joins over 80 big combs equal the brute-force ray cast, boundary probes included") {
+    graft.sql.functions.registerOptimizations(spark)
+    // 80 overlapping 131-vertex combs: more polygons of >= 128 vertices
+    // than a per-thread decode cache of 64 slots could hold. Every
+    // coordinate is a multiple of 1/128, so edge midpoints are exact
+    // and lie exactly on the boundary.
+    val combs = (0 until 80).map { i =>
+      val xl = (i % 10) * 7.0; val yb = (i / 10) * 5.0
+      val xr = xl + 9.0; val yt = yb + 6.0
+      val teeth = (1 to 128).map { k =>
+        (xr - k * 9.0 / 128, if (k % 2 == 0) yt else yt - (1.0 + ((i + k) % 4) * 0.5))
+      }
+      val ring = Seq((xl, yb), (xr, yb), (xr, yt)) ++ teeth :+ ((xl, yb))
+      i -> ring
+    }
+    def wkt(ring: Seq[(Double, Double)]) =
+      ring.map { case (x, y) => s"$x $y" }.mkString("POLYGON((", ",", "))")
+    val probes = combs.flatMap { case (i, ring) =>
+      val edges = ring.zip(ring.tail)
+      val vertices = ring.init
+      val midpoints = edges.map { case ((x1, y1), (x2, y2)) => ((x1 + x2) / 2, (y1 + y2) / 2) }
+      val interior = (1 to 16).map(j => (ring.head._1 + j * 0.5, ring.head._2 + 0.5))
+      vertices ++ midpoints ++ interior
+    }.zipWithIndex.map { case ((x, y), k) => (k.toLong, x, y) }
+    val pts = probes.toDF("k", "px", "py")
+    val polys = combs.map { case (i, ring) => (i, wkt(ring)) }.toDF("pid", "w")
+      .select(col("pid"), gf.st_geomfromtext(col("w")).as("geom"))
+    val geoms = combs.map { case (i, ring) => i -> graft.core.Wkt.read(wkt(ring)) }
+    def expected(keep: Int => Boolean) = (for {
+      (k, x, y) <- probes; (i, g) <- geoms
+      if keep(graft.kernels.Planar.coordPos(g, x, y))
+    } yield (k, i)).toSet
+    def routed(pred: org.apache.spark.sql.Column) = {
+      val j = pts.join(polys, pred)
+      assert(j.queryExecution.optimizedPlan.toString.contains("covering"), "join was not rewritten")
+      assert(!j.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
+      j.select("k", "pid").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    }
+    val inside = expected(_ == graft.kernels.Planar.Inside)
+    val touching = expected(_ != graft.kernels.Planar.Outside)
+    assert(inside.nonEmpty && inside.size < touching.size, "probes must hit interiors and boundaries")
+    assert(routed(gf.st_contains_xy(col("geom"), col("px"), col("py"))) == inside)
+    assert(routed(gf.st_intersects_xy(col("geom"), col("px"), col("py"))) == touching)
+  }
+
   test("compacted ancestor PIP join equals the plain broadcast join and shrinks the build side") {
     val pts = Queries.customerPoints(spark, sf)
     val polys = Queries.starPolys(spark, sf)

@@ -7,9 +7,33 @@ Usage: compare.py <verify_out_dir> <sf_dir> [query ...]
 """
 import sys, json, glob, os
 import duckdb
+import numpy
+import pandas as pd
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+def aligned(spark_df, ora_df, cols):
+    """Both frames sorted into comparable row order. Numeric columns are
+    coerced to a common dtype (the driver hashes values, not physical
+    parquet types). pandas .equals treats -0.0 == 0.0 while the driver
+    hashes the bits, so each float column also carries its sign bit as a
+    column of its own, which .equals and the sort both see."""
+    keys = list(cols)
+    for c in cols:
+        sa, sb = spark_df[c], ora_df[c]
+        if sa.dtype != sb.dtype and pd.api.types.is_numeric_dtype(sa) \
+                and pd.api.types.is_numeric_dtype(sb):
+            spark_df[c] = sa.astype("float64")
+            ora_df[c] = sb.astype("float64")
+        if pd.api.types.is_float_dtype(spark_df[c]) and \
+                pd.api.types.is_float_dtype(ora_df[c]):
+            sign = f"{c}.signbit"
+            spark_df[sign] = numpy.signbit(spark_df[c])
+            ora_df[sign] = numpy.signbit(ora_df[c])
+            keys.append(sign)
+    return tuple(df[keys].sort_values(keys).reset_index(drop=True)
+                 for df in (spark_df, ora_df))
 
 def main():
     out_dir, sf_dir = sys.argv[1], sys.argv[2]
@@ -48,17 +72,7 @@ def main():
         if s_cols != o_cols:
             r["cols"] = {"spark": s_cols, "oracle": o_cols}
         else:
-            # numeric columns compare after coercion to a common dtype
-            # (the driver hashes values, not physical parquet types)
-            for c in s_cols:
-                sa, sb = spark_df[c], ora_df[c]
-                if sa.dtype != sb.dtype:
-                    import pandas as pd
-                    if pd.api.types.is_numeric_dtype(sa) and                        pd.api.types.is_numeric_dtype(sb):
-                        spark_df[c] = sa.astype("float64")
-                        ora_df[c] = sb.astype("float64")
-            a = spark_df[s_cols].sort_values(s_cols).reset_index(drop=True)
-            b = ora_df[s_cols].sort_values(s_cols).reset_index(drop=True)
+            a, b = aligned(spark_df, ora_df, s_cols)
             r["rows_match"] = len(a) == len(b)
             r["hash_match"] = bool(len(a) == len(b) and a.equals(b))
             if not r["hash_match"] and len(a) == len(b):
