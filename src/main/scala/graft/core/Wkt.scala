@@ -22,8 +22,9 @@ object Wkt {
     try Some(read(s)) catch { case _: IllegalArgumentException => None }
 
   /** EXPLICITLY LOSSY 2-D projection of XYZ/XYM/XYZM WKT: the Z / M /
-    * ZM dimension token and any third/fourth ordinates (including the
-    * bare PostGIS `POINT(1 2 3)` spelling) parse and DROP. The default
+    * ZM dimension token and the ordinates it declares (including the
+    * bare PostGIS `POINT(1 2 3)` spelling) parse and DROP; more
+    * ordinates than declared are rejected. The default
     * reader keeps the typed rejection contract — this is the opt-in
     * escape hatch for PostGIS-sourced corpora. */
   def readForce2D(s: String): FlatGeom = {
@@ -74,15 +75,20 @@ object Wkt {
       java.lang.Double.parseDouble(s.substring(start, pos))
     }
 
+    /** Extra ordinates force-2D mode may drop per coordinate: 2 after a
+      * ZM token, else 1 (Z, M, or the bare PostGIS XYZ spelling). Set
+      * by the dimension token of the geometry being parsed. */
+    var maxExtra = 1
+
     def coordPair(buf: ArrayBuffer[Double]): Unit = {
       buf += number()
       buf += number()
       skipWs()
       if (force2D) {
-        // lossy 2-D projection: up to two extra ordinates (Z, M) drop
+        // lossy 2-D projection: the declared extra ordinates drop
         var extra = 0
         var more = true
-        while (more && extra < 2) {
+        while (more && extra < maxExtra) {
           skipWs()
           if (!eof && { val c = s.charAt(pos)
             c == '-' || c == '+' || c == '.' || (c >= '0' && c <= '9') }) {
@@ -90,10 +96,13 @@ object Wkt {
           } else more = false
         }
       }
-      // reject a third (Z) ordinate (2-D contract; readForce2D opts out)
+      // reject a third (Z) ordinate (2-D contract; readForce2D drops up
+      // to maxExtra of them)
+      skipWs()
       if (!eof) { val c = s.charAt(pos)
         if (c == '-' || c == '+' || c == '.' || (c >= '0' && c <= '9'))
-          fail("3-D coordinates not supported") }
+          fail(if (force2D) "coordinates exceed the declared dimension"
+            else "3-D coordinates not supported") }
     }
 
     /** ( x y, x y, ... ) */
@@ -125,6 +134,7 @@ object Wkt {
       var p = pos
       while (p < s.length && s.charAt(p).isLetter) p += 1
       val tok = s.substring(pos, p).toUpperCase
+      maxExtra = if (tok == "ZM") 2 else 1
       if (tok == "Z" || tok == "M" || tok == "ZM") {
         if (force2D) pos = p // lossy mode: consume the token, drop dims
         else fail("Z/M dimensions unsupported (2-D engine)")

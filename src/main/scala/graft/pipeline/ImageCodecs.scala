@@ -169,7 +169,7 @@ object ImageCodecs {
           require((b(pos + 18) & 0xff) == 0 && (b(pos + 19) & 0xff) == 0,
             "PNG: unsupported compression/filter method")
           require((b(pos + 20) & 0xff) == 0, "PNG: interlaced images unsupported")
-          checkDims(w, h, b.length, 0)
+          checkDims(w, h, if (colorType == 6) 4 else 3, b.length, DeflateMaxRatio, rowExtra = 1)
         case "IDAT" =>
           require(w > 0, "PNG: IDAT before IHDR")
           idat.write(b, pos + 8, len)
@@ -359,7 +359,7 @@ object ImageCodecs {
           val iw = u16(pos + 5); val ih = u16(pos + 7)
           val iflags = b(pos + 9) & 0xff
           pos += 10
-          checkDims(iw, ih, b.length, 0)
+          checkDims(iw, ih, 3, b.length, 3 * LzwMaxIndicesPerByte)
           var table = gct
           if ((iflags & 0x80) != 0) {
             val n = 2 << (iflags & 7)
@@ -510,14 +510,27 @@ object ImageCodecs {
     (v, i)
   }
 
-  /** Adversarial-header guard: dimensions must be positive and the
-    * pixel count must fit the payload we actually hold — without this
-    * a forged header could drive a negative/overflowed allocation
-    * (raw NegativeArraySizeException instead of the typed error). */
-  private def checkDims(w: Int, h: Int, available: Int, bytesPerPx: Int): Unit = {
+  /** Deflate's best case codes a 258-byte match in about 2 bits: at
+    * most ~1032 output bytes per input byte. */
+  private val DeflateMaxRatio = 1032L
+
+  /** GIF LZW: the k-th code after a clear emits at most k indices and
+    * is at least log2(k) bits wide, and a full table caps a code at
+    * 4096 indices in 12 bits: at most ~2731 indices per payload byte. */
+  private val LzwMaxIndicesPerByte = 2731L
+
+  /** Adversarial-header guard: dimensions must be positive, and the
+    * largest buffer the decoder allocates for them (`bytesPerPx` a
+    * pixel plus `rowExtra` a row) must fit an array and at most
+    * `maxRatio` bytes per payload byte — the most the format can
+    * expand. Products are Long, so a forged header can neither
+    * overflow into a negative size nor drive an allocation the payload
+    * cannot fill; it gets the typed error instead. */
+  private def checkDims(w: Int, h: Int, bytesPerPx: Int, available: Int, maxRatio: Long,
+      rowExtra: Int = 0): Unit = {
     require(w > 0 && h > 0, s"image: non-positive dimensions $w x $h")
-    require(w.toLong * h * 3 <= Int.MaxValue &&
-      (bytesPerPx == 0 || w.toLong * h * bytesPerPx <= available.toLong),
+    val bytes = h.toLong * (w.toLong * bytesPerPx + rowExtra)
+    require(bytes <= Int.MaxValue && bytes <= available * maxRatio,
       s"image: dimensions $w x $h exceed the payload")
   }
 
@@ -525,7 +538,7 @@ object ImageCodecs {
     val (w, i1) = readToken(b, 2)
     val (h, i2) = readToken(b, i1)
     val (maxval, i3) = readToken(b, i2)
-    checkDims(w, h, b.length, 3)
+    checkDims(w, h, 3, b.length, 1)
     require(maxval == 255, s"P6: only maxval 255 supported, got $maxval")
     require(i3 < b.length && (b(i3) == ' ' || b(i3) == '\t' || b(i3) == '\n' || b(i3) == '\r'),
       "P6: missing whitespace after maxval")
@@ -541,7 +554,7 @@ object ImageCodecs {
     val (w, i1) = readToken(b, 2)
     val (h, i2) = readToken(b, i1)
     val (maxval, i3) = readToken(b, i2)
-    checkDims(w, h, b.length, 0) // ASCII samples: only the product bound applies
+    checkDims(w, h, 3, b.length, 1) // every ASCII sample takes at least one byte
     require(maxval == 255, s"P3: only maxval 255 supported, got $maxval")
     val need = w * h * 3
     val rgb = new Array[Byte](need)
@@ -568,7 +581,7 @@ object ImageCodecs {
     val h = if (topDown) -rawH else rawH
     require(u16(28) == 24, s"BMP: only 24bpp supported, got ${u16(28)}")
     require(u32(30) == 0, s"BMP: only BI_RGB (uncompressed) supported, got ${u32(30)}")
-    checkDims(w, h, b.length, 3)
+    checkDims(w, h, 3, b.length, 1)
     val rowBytes = w * 3
     val stride = rowBytes + (4 - rowBytes % 4) % 4
     require(dataOff >= 54 && dataOff < b.length, s"BMP: bad data offset $dataOff")

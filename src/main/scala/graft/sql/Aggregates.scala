@@ -31,7 +31,7 @@ object GeomAggBuffers {
 
 abstract class GeomTypedAgg[B] extends TypedImperativeAggregate[B] {
   override def nullable: Boolean = true
-  override def dataType: DataType = GeomExprs.geomType
+  override def dataType: DataType = GeomSchema.dataType
 }
 
 /** Dissolve: n-way union with per-partition partials. */

@@ -1,1923 +1,553 @@
 package graft.sql
 
+import java.lang.reflect.{InvocationTargetException, Method, Modifier}
+
+import graft.kernels.Overlay
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode,
+  FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.graft.MethodInputTypes
 import org.apache.spark.sql.types._
 
 /**
- * Catalyst expressions for every st_* operator (SURVEY.md §2). Each is
- * a thin wrapper over a static method in [[GeomEval]]; codegen emits a
- * direct static call so surrounding stages stay inside whole-stage
- * codegen (no Scala-UDF or CodegenFallback in hot paths).
+ * One st_* expression = one static call
+ * `graft.sql.GeomEval.<fname>(children…, constArgs…)`.
+ *
+ * Codegen emits that call directly, so surrounding stages stay inside
+ * whole-stage codegen (no Scala-UDF or CodegenFallback in hot paths).
+ * The interpreted `eval` (constant folding, local relations, codegen
+ * off, children of imperative aggregates) invokes the same static
+ * method through a `java.lang.reflect.Method` resolved once per
+ * instance, so the two paths cannot disagree on which kernel runs.
+ * GeomEval has no overloaded names: the name picks the method, and the
+ * method's parameter types are the expected input types, so analysis
+ * casts an int or DECIMAL literal for a double parameter the way it
+ * does for any built-in function.
+ *
+ * Null contract: any null child gives NULL without calling the kernel;
+ * object-typed results (geom struct, string, array, binary) may also be
+ * null for non-null inputs (EMPTY geometry, non-convergence), and so
+ * may a primitive SQL type the method returns boxed.
  */
-object GeomExprs {
-  val geomType: DataType = GeomSchema.dataType
-}
+abstract class GeomCall(val fname: String, override val dataType: DataType)
+    extends Expression with MethodInputTypes with Serializable {
 
-// ----------------------------------------------------------- base forms
+  /** Compile-time arguments passed after the children (op codes). */
+  protected def constArgs: Seq[Any] = Nil
 
-/** Shared codegen: object-typed results (geom struct, string, array,
-  * binary) get an explicit `== null` check after the static call —
-  * `defineCodeGen` alone would leave isNull=false when the kernel
-  * returns null (e.g. closest point of an EMPTY geometry), handing a
-  * null struct to the next expression inside whole-stage codegen. */
-private[sql] object GeomCodegen {
-  import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-  def isPrimitive(dt: DataType): Boolean = CodeGenerator.isPrimitiveType(dt)
-}
+  @transient private lazy val method: Method = GeomCall.method(fname)
 
-abstract class GeomUnaryExpr extends UnaryExpression with Serializable {
-  /** Object-typed kernels may return null even for non-null inputs
-    * (EMPTY geometry, non-convergence) — declare it. */
+  /** Number of children the static method takes. */
+  def arity: Int = method.getParameterCount - constArgs.length
+
+  /** The static method's parameter types, children first. */
+  def parameterTypes: Seq[Class[_]] = method.getParameterTypes.toSeq.take(arity)
+
+  private def primitiveResult: Boolean = CodeGenerator.isPrimitiveType(dataType)
+
+  /** A primitive SQL type that the method returns boxed, null = NULL. */
+  private def boxedResult: Boolean = primitiveResult && !method.getReturnType.isPrimitive
+
   override def nullable: Boolean =
-    !GeomCodegen.isPrimitive(dataType) || super.nullable
-  /** Name of the static method on graft.sql.GeomEval. */
-  def fname: String
-  protected def evalFn(input: Any): Any
+    !primitiveResult || boxedResult || children.exists(_.nullable)
   override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any = evalFn(input)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (GeomCodegen.isPrimitive(dataType))
-      defineCodeGen(ctx, ev, c => s"graft.sql.GeomEval.$fname($c)")
-    else nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.sql.GeomEval.$fname($c);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  override def foldable: Boolean = children.forall(_.foldable)
   override def prettyName: String = fname
+
+  override def eval(input: InternalRow): Any = {
+    val args = new Array[AnyRef](children.length + constArgs.length)
+    var i = 0
+    val it = children.iterator
+    while (it.hasNext) {
+      val v = it.next().eval(input)
+      if (v == null) return null
+      args(i) = v.asInstanceOf[AnyRef]
+      i += 1
+    }
+    constArgs.foreach { c => args(i) = c.asInstanceOf[AnyRef]; i += 1 }
+    try method.invoke(null, args: _*)
+    catch { case e: InvocationTargetException => throw e.getCause }
+  }
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCall(ctx, ev) { args =>
+      val call = s"graft.sql.GeomEval.$fname(${(args ++ constArgs.map(_.toString)).mkString(", ")})"
+      if (boxedResult) {
+        val raw = ctx.freshName("boxed")
+        s"""Object $raw = $call;
+           |${ev.isNull} = $raw == null;
+           |if (!${ev.isNull}) ${ev.value} = (${CodeGenerator.boxedType(dataType)}) $raw;""".stripMargin
+      } else if (primitiveResult) s"${ev.value} = $call;"
+      else s"${ev.value} = $call;\n${ev.isNull} = ${ev.value} == null;"
+    }
+
+  /** N-ary form of Spark's `nullSafeCodeGen`: children are evaluated
+    * left to right and `body` (given their value terms) runs only when
+    * none is null. */
+  protected def nullSafeCall(ctx: CodegenContext, ev: ExprCode)(
+      body: Seq[String] => String): ExprCode = {
+    val gens = children.map(_.genCode(ctx))
+    val result = body(gens.map(_.value.toString))
+    val javaType = CodeGenerator.javaType(dataType)
+    val default = CodeGenerator.defaultValue(dataType)
+    if (nullable) {
+      val guarded = children.zip(gens).foldRight(s"${ev.isNull} = false;\n$result") {
+        case ((c, g), inner) => s"${g.code}\n" + ctx.nullSafeExec(c.nullable, g.isNull.toString)(inner)
+      }
+      ev.copy(code = code"""
+        boolean ${ev.isNull} = true;
+        $javaType ${ev.value} = $default;
+        $guarded""")
+    } else {
+      ev.copy(code = code"""
+        ${gens.map(_.code.toString).mkString("\n")}
+        $javaType ${ev.value} = $default;
+        $result""", isNull = FalseLiteral)
+    }
+  }
+
+  /** Codegen through the method's primitive `raw` twin, which signals
+    * NULL with NaN (no boxing on the hot path). */
+  protected def nanIsNull(ctx: CodegenContext, ev: ExprCode, raw: String): ExprCode =
+    nullSafeCall(ctx, ev) { args =>
+      s"""${ev.value} = graft.sql.GeomEval.$raw(${args.mkString(", ")});
+         |${ev.isNull} = Double.isNaN(${ev.value});""".stripMargin
+    }
+
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
+    makeCopy(Array(c))
 }
 
-abstract class GeomBinaryExpr extends BinaryExpression with Serializable {
-  /** Object-typed kernels may return null even for non-null inputs
-    * (EMPTY geometry, non-convergence) — declare it. */
-  override def nullable: Boolean =
-    !GeomCodegen.isPrimitive(dataType) || super.nullable
-  def fname: String
-  protected def evalFn(a: Any, b: Any): Any
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any): Any = evalFn(a, b)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (GeomCodegen.isPrimitive(dataType))
-      defineCodeGen(ctx, ev, (a, b) => s"graft.sql.GeomEval.$fname($a, $b)")
-    else nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""${ev.value} = graft.sql.GeomEval.$fname($a, $b);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
-  override def prettyName: String = fname
+object GeomCall {
+  private lazy val methods: Map[String, Method] =
+    Class.forName("graft.sql.GeomEval").getMethods.toSeq
+      .filter(m => Modifier.isStatic(m.getModifiers))
+      .groupBy(_.getName).map { case (name, ms) =>
+        require(ms.size == 1, s"GeomEval.$name is overloaded")
+        name -> ms.head
+      }
+
+  def method(fname: String): Method =
+    methods.getOrElse(fname, throw new IllegalArgumentException(s"no static GeomEval.$fname"))
+
+  // result types shared by several expressions
+  val Geom: DataType = GeomSchema.dataType
+  val Geoms: DataType = ArrayType(Geom, containsNull = false)
+  val Longs: DataType = ArrayType(LongType, containsNull = false)
+  val Ints: DataType = ArrayType(IntegerType, containsNull = false)
+  val Strings: DataType = ArrayType(StringType, containsNull = false)
+  val HexCell: DataType = StructType(Seq(
+    StructField("q", LongType, nullable = false), StructField("r", LongType, nullable = false)))
+  val HexCells: DataType = ArrayType(HexCell, containsNull = false)
+  val GridCells: DataType = ArrayType(StructType(Seq(
+    StructField("i", LongType, nullable = false),
+    StructField("j", LongType, nullable = false))), containsNull = false)
+  val Circle: DataType = StructType(Seq(
+    StructField("center", Geom), StructField("nearest", Geom), StructField("radius", DoubleType)))
+  val CenterRadius: DataType = StructType(Seq(
+    StructField("center", Geom, nullable = false),
+    StructField("radius", DoubleType, nullable = false)))
+  val Extremes: DataType = StructType(Seq(
+    StructField("xmin_idx", IntegerType), StructField("xmin", DoubleType),
+    StructField("ymin_idx", IntegerType), StructField("ymin", DoubleType),
+    StructField("xmax_idx", IntegerType), StructField("xmax", DoubleType),
+    StructField("ymax_idx", IntegerType), StructField("ymax", DoubleType)))
+  val TileZxy: DataType = StructType(Seq(
+    StructField("z", IntegerType, nullable = false),
+    StructField("x", LongType, nullable = false),
+    StructField("y", LongType, nullable = false)))
+  val MvtFeatures: DataType = ArrayType(StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("geom", Geom, nullable = false),
+    StructField("tags", MapType(StringType, StringType, valueContainsNull = false),
+      nullable = false))), containsNull = false)
 }
 
-abstract class GeomTernaryExpr extends TernaryExpression with Serializable {
-  /** Object-typed kernels may return null even for non-null inputs
-    * (EMPTY geometry, non-convergence) — declare it. */
-  override def nullable: Boolean =
-    !GeomCodegen.isPrimitive(dataType) || super.nullable
-  def fname: String
-  protected def evalFn(a: Any, b: Any, c: Any): Any
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any, c: Any): Any = evalFn(a, b, c)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (GeomCodegen.isPrimitive(dataType))
-      defineCodeGen(ctx, ev, (a, b, c) => s"graft.sql.GeomEval.$fname($a, $b, $c)")
-    else nullSafeCodeGen(ctx, ev, (a, b, c) =>
-      s"""${ev.value} = graft.sql.GeomEval.$fname($a, $b, $c);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
-  override def prettyName: String = fname
-}
+import GeomCall._
+
+// Catalyst expressions for every st_* operator (SURVEY.md §2): each is
+// one GeomCall, one class per function (SpatialJoinRule matches on the
+// classes); the SQL names that build them live in Catalogue.
 
 // --------------------------------------------------------------- codecs
 
-case class StGeomFromText(child: Expression) extends GeomUnaryExpr {
-  def fname = "geomFromTextOrNull"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) =
-    GeomEval.geomFromTextOrNull(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
+case class StGeomFromText(children: Args) extends GeomCall("geomFromTextOrNull", Geom)
 /** Lossy 2-D parse: XYZ/XYM/XYZM WKT accepted, Z/M dropped. */
-case class StGeomFromTextForce2D(child: Expression) extends GeomUnaryExpr {
-  def fname = "geomFromTextForce2D"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) =
-    GeomEval.geomFromTextForce2D(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-case class StAsText(child: Expression) extends GeomUnaryExpr {
-  def fname = "asText"
-  override def dataType: DataType = StringType
-  protected def evalFn(v: Any) = GeomEval.asText(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-case class StAsGeoJson(child: Expression) extends GeomUnaryExpr {
-  def fname = "asGeoJson"
-  override def dataType: DataType = StringType
-  protected def evalFn(v: Any) = GeomEval.asGeoJson(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-case class StGeomFromGeoJson(child: Expression) extends GeomUnaryExpr {
-  def fname = "geomFromGeoJsonOrNull"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) =
-    GeomEval.geomFromGeoJsonOrNull(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-case class StCollectionFromText(child: Expression) extends GeomUnaryExpr {
-  def fname = "collectionFromText"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) =
-    GeomEval.collectionFromText(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StCollectionAsText(child: Expression) extends GeomUnaryExpr {
-  def fname = "collectionAsText"
-  override def dataType: DataType = StringType
-  protected def evalFn(v: Any) =
-    GeomEval.collectionAsText(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
+case class StGeomFromTextForce2D(children: Args) extends GeomCall("geomFromTextForce2D", Geom)
+case class StAsText(children: Args) extends GeomCall("asText", StringType)
+case class StAsGeoJson(children: Args) extends GeomCall("asGeoJson", StringType)
+case class StGeomFromGeoJson(children: Args) extends GeomCall("geomFromGeoJsonOrNull", Geom)
+case class StCollectionFromText(children: Args) extends GeomCall("collectionFromText", Geoms)
+case class StCollectionAsText(children: Args) extends GeomCall("collectionAsText", StringType)
 /** Unary union over the array<geom> collection form: dissolve the
   * parts into canonical disjoint components — merged polygons, fully
   * noded + dissolved linework, residual points (kernels/UnaryUnion).
   * The geo crate's BooleanOps is binary-only; this is the JTS
   * `Geometry.union()` shape, gated by TestUnaryUnion(-Floating).xml. */
-case class StUnaryUnion(child: Expression) extends GeomUnaryExpr {
-  def fname = "unaryUnion"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) =
-    GeomEval.unaryUnion(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
+case class StUnaryUnion(children: Args) extends GeomCall("unaryUnion", Geoms)
 /** OGC Mod-2 boundary: empty for 0-D, odd-occurrence endpoints for
   * 1-D, rings as linework for 2-D (kernels/Topo.boundary). */
-case class StBoundary(child: Expression) extends GeomUnaryExpr {
-  def fname = "boundary"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.boundary(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
+case class StBoundary(children: Args) extends GeomCall("boundary", Geom)
 /** Polygonize linework into the maximal set of polygons (dangles
   * dropped, holes assigned) — kernels/Polygonize. */
-case class StPolygonize(child: Expression) extends GeomUnaryExpr {
-  def fname = "polygonize"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) =
-    GeomEval.polygonize(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
+case class StPolygonize(children: Args) extends GeomCall("polygonize", Geoms)
 /** Minimum clearance: smallest positive vertex-vertex or
   * vertex-to-non-incident-segment distance (JTS MinimumClearance);
   * Double.MaxValue when undefined. */
-case class StMinClearance(child: Expression) extends GeomUnaryExpr {
-  def fname = "minClearance"
-  override def dataType: DataType = DoubleType
-  protected def evalFn(v: Any) = GeomEval.minClearance(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StMinClearanceLine(child: Expression) extends GeomUnaryExpr {
-  def fname = "minClearanceLine"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.minClearanceLine(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
+case class StMinClearance(children: Args) extends GeomCall("minClearance", DoubleType)
+case class StMinClearanceLine(children: Args) extends GeomCall("minClearanceLine", Geom)
 /** Number of parts of a (multi-)geometry (1 for simple kinds). */
-case class StNumParts(child: Expression) extends GeomUnaryExpr {
-  def fname = "numParts"
-  override def dataType: DataType = IntegerType
-  protected def evalFn(v: Any) = GeomEval.numParts(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StWinnowFingerprints(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with Serializable {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(t: Any, k: Any, w: Any): Any =
-    GeomEval.winnowFingerprints(t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      k.asInstanceOf[Int], w.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, k, w) => s"graft.sql.GeomEval.winnowFingerprints($t, $k, $w)")
-  override def prettyName: String = "winnowFingerprints"
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
-case class StGeometryType(child: Expression) extends GeomUnaryExpr {
-  def fname = "geometryType"
-  override def dataType: DataType = StringType
-  protected def evalFn(v: Any) = GeomEval.geometryType(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
+case class StNumParts(children: Args) extends GeomCall("numParts", IntegerType)
+case class StWinnowFingerprints(children: Args) extends GeomCall("winnowFingerprints", Longs)
+case class StGeometryType(children: Args) extends GeomCall("geometryType", StringType)
 /** Axis-aligned rectangle from corner ordinates — the allocation-light
   * constructor for grid/cell geometry (no WKT round-trip). */
-case class StRect(first: Expression, second: Expression, third: Expression, fourth: Expression)
-    extends QuaternaryExpression with Serializable {
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-    GeomEval.rectXY(a.asInstanceOf[Double], b.asInstanceOf[Double],
-      c.asInstanceOf[Double], d.asInstanceOf[Double])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c, d) => s"graft.sql.GeomEval.rectXY($a, $b, $c, $d)")
-  override def prettyName: String = "rectXY"
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-      c: Expression, d: Expression): Expression = copy(a, b, c, d)
-}
-
-case class StPoint(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "point"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.point(a.asInstanceOf[Double], b.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
+case class StRect(children: Args) extends GeomCall("rectXY", Geom)
+case class StPoint(children: Args) extends GeomCall("point", Geom)
 
 // ----------------------------------------------------- unary geom -> num
 
-abstract class GeomToDouble extends GeomUnaryExpr {
-  override def dataType: DataType = DoubleType
-}
-
-case class StArea(child: Expression) extends GeomToDouble {
-  def fname = "area"
-  protected def evalFn(v: Any) = GeomEval.area(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StUnsignedArea(child: Expression) extends GeomToDouble {
-  def fname = "unsignedArea"
-  protected def evalFn(v: Any) = GeomEval.unsignedArea(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StSphereArea(child: Expression) extends GeomToDouble {
-  def fname = "sphereArea"
-  protected def evalFn(v: Any) = GeomEval.sphereArea(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StGeodesicArea(child: Expression) extends GeomToDouble {
-  def fname = "geodesicArea"
-  protected def evalFn(v: Any) = GeomEval.geodesicArea(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StGeodesicAreaUnsigned(child: Expression) extends GeomToDouble {
-  def fname = "geodesicAreaUnsigned"
-  protected def evalFn(v: Any) = GeomEval.geodesicAreaUnsigned(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StLength(child: Expression) extends GeomToDouble {
-  def fname = "length"
-  protected def evalFn(v: Any) = GeomEval.length(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StLengthSphere(child: Expression) extends GeomToDouble {
-  def fname = "lengthSphere"
-  protected def evalFn(v: Any) = GeomEval.lengthSphere(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StLengthRhumb(child: Expression) extends GeomToDouble {
-  def fname = "lengthRhumb"
-  protected def evalFn(v: Any) = GeomEval.lengthRhumb(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StLengthGeodesic(child: Expression) extends GeomToDouble {
-  def fname = "lengthGeodesic"
-  protected def evalFn(v: Any) = GeomEval.lengthGeodesic(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StPerimeter(child: Expression) extends GeomToDouble {
-  def fname = "perimeter"
-  protected def evalFn(v: Any) = GeomEval.perimeter(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StXMin(child: Expression) extends GeomToDouble {
-  def fname = "xMin"
-  protected def evalFn(v: Any) = GeomEval.xMin(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StYMin(child: Expression) extends GeomToDouble {
-  def fname = "yMin"
-  protected def evalFn(v: Any) = GeomEval.yMin(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StXMax(child: Expression) extends GeomToDouble {
-  def fname = "xMax"
-  protected def evalFn(v: Any) = GeomEval.xMax(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StYMax(child: Expression) extends GeomToDouble {
-  def fname = "yMax"
-  protected def evalFn(v: Any) = GeomEval.yMax(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StX(child: Expression) extends GeomToDouble {
-  def fname = "pointX"
-  protected def evalFn(v: Any) = GeomEval.pointX(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StY(child: Expression) extends GeomToDouble {
-  def fname = "pointY"
-  protected def evalFn(v: Any) = GeomEval.pointY(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-case class StNumPoints(child: Expression) extends GeomUnaryExpr {
-  def fname = "numPoints"
-  override def dataType: DataType = IntegerType
-  protected def evalFn(v: Any) = GeomEval.numPoints(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StIsEmpty(child: Expression) extends GeomUnaryExpr {
-  def fname = "isEmpty"
-  override def dataType: DataType = BooleanType
-  protected def evalFn(v: Any) = GeomEval.isEmpty(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StIsCcw(child: Expression) extends GeomUnaryExpr {
-  def fname = "isCcw"
-  override def dataType: DataType = BooleanType
-  protected def evalFn(v: Any) = GeomEval.isCcw(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StIsConvex(child: Expression) extends GeomUnaryExpr {
-  def fname = "isConvex"
-  override def dataType: DataType = BooleanType
-  protected def evalFn(v: Any) = GeomEval.isConvex(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StWindingOrder(child: Expression) extends GeomUnaryExpr {
-  def fname = "windingOrder"
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.windingOrder(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
+case class StArea(children: Args) extends GeomCall("area", DoubleType)
+case class StUnsignedArea(children: Args) extends GeomCall("unsignedArea", DoubleType)
+case class StSphereArea(children: Args) extends GeomCall("sphereArea", DoubleType)
+case class StGeodesicArea(children: Args) extends GeomCall("geodesicArea", DoubleType)
+case class StGeodesicAreaUnsigned(children: Args) extends GeomCall("geodesicAreaUnsigned", DoubleType)
+case class StLength(children: Args) extends GeomCall("length", DoubleType)
+case class StLengthSphere(children: Args) extends GeomCall("lengthSphere", DoubleType)
+case class StLengthRhumb(children: Args) extends GeomCall("lengthRhumb", DoubleType)
+case class StLengthGeodesic(children: Args) extends GeomCall("lengthGeodesic", DoubleType)
+case class StPerimeter(children: Args) extends GeomCall("perimeter", DoubleType)
+case class StXMin(children: Args) extends GeomCall("xMin", DoubleType)
+case class StYMin(children: Args) extends GeomCall("yMin", DoubleType)
+case class StXMax(children: Args) extends GeomCall("xMax", DoubleType)
+case class StYMax(children: Args) extends GeomCall("yMax", DoubleType)
+case class StX(children: Args) extends GeomCall("pointX", DoubleType)
+case class StY(children: Args) extends GeomCall("pointY", DoubleType)
+case class StNumPoints(children: Args) extends GeomCall("numPoints", IntegerType)
+case class StIsEmpty(children: Args) extends GeomCall("isEmpty", BooleanType)
+case class StIsCcw(children: Args) extends GeomCall("isCcw", BooleanType)
+case class StIsConvex(children: Args) extends GeomCall("isConvex", BooleanType)
+case class StWindingOrder(children: Args) extends GeomCall("windingOrder", StringType)
 
 // ---------------------------------------------------- unary geom -> geom
 
-abstract class GeomToGeom extends GeomUnaryExpr {
-  override def dataType: DataType = GeomExprs.geomType
-}
-
-case class StCentroid(child: Expression) extends GeomToGeom {
-  def fname = "centroid"
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.centroid(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StEnvelope(child: Expression) extends GeomToGeom {
-  def fname = "envelope"
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.envelope(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StInteriorPoint(child: Expression) extends GeomToGeom {
-  def fname = "interiorPoint"
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.interiorPoint(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StConvexHull(child: Expression) extends GeomToGeom {
-  def fname = "convexHull"
-  protected def evalFn(v: Any) = GeomEval.convexHull(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StRemoveRepeated(child: Expression) extends GeomToGeom {
-  def fname = "removeRepeated"
-  protected def evalFn(v: Any) = GeomEval.removeRepeated(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StToRadians(child: Expression) extends GeomToGeom {
-  def fname = "toRadians"
-  protected def evalFn(v: Any) = GeomEval.toRadians(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StToDegrees(child: Expression) extends GeomToGeom {
-  def fname = "toDegrees"
-  protected def evalFn(v: Any) = GeomEval.toDegrees(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StForceCw(child: Expression) extends GeomToGeom {
-  def fname = "forceCw"
-  protected def evalFn(v: Any) = GeomEval.forceCw(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StForceCcw(child: Expression) extends GeomToGeom {
-  def fname = "forceCcw"
-  protected def evalFn(v: Any) = GeomEval.forceCcw(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-case class StDumpPoints(child: Expression) extends GeomUnaryExpr {
-  def fname = "dumpPoints"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  protected def evalFn(v: Any) = GeomEval.dumpPoints(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StDumpSegments(child: Expression) extends GeomUnaryExpr {
-  def fname = "dumpSegments"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  protected def evalFn(v: Any) = GeomEval.dumpSegments(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StExtremes(child: Expression) extends GeomUnaryExpr {
-  def fname = "extremes"
-  override def nullable: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("xmin_idx", IntegerType), StructField("xmin", DoubleType),
-    StructField("ymin_idx", IntegerType), StructField("ymin", DoubleType),
-    StructField("xmax_idx", IntegerType), StructField("xmax", DoubleType),
-    StructField("ymax_idx", IntegerType), StructField("ymax", DoubleType)))
-  protected def evalFn(v: Any) = GeomEval.extremes(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
+case class StCentroid(children: Args) extends GeomCall("centroid", Geom)
+case class StEnvelope(children: Args) extends GeomCall("envelope", Geom)
+case class StInteriorPoint(children: Args) extends GeomCall("interiorPoint", Geom)
+case class StConvexHull(children: Args) extends GeomCall("convexHull", Geom)
+case class StRemoveRepeated(children: Args) extends GeomCall("removeRepeated", Geom)
+case class StToRadians(children: Args) extends GeomCall("toRadians", Geom)
+case class StToDegrees(children: Args) extends GeomCall("toDegrees", Geom)
+case class StForceCw(children: Args) extends GeomCall("forceCw", Geom)
+case class StForceCcw(children: Args) extends GeomCall("forceCcw", Geom)
+case class StDumpPoints(children: Args) extends GeomCall("dumpPoints", Geoms)
+case class StDumpSegments(children: Args) extends GeomCall("dumpSegments", Geoms)
+case class StExtremes(children: Args) extends GeomCall("extremes", Extremes)
 
 // --------------------------------------------------------- binary preds
 
-abstract class GeomPairToBool extends GeomBinaryExpr {
-  override def dataType: DataType = BooleanType
-}
-
-case class StContains(left: Expression, right: Expression) extends GeomPairToBool {
-  def fname = "contains"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.contains(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StWithin(left: Expression, right: Expression) extends GeomPairToBool {
-  def fname = "within"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.within(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StIntersects(left: Expression, right: Expression) extends GeomPairToBool {
-  def fname = "intersects"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.intersects(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StDisjoint(left: Expression, right: Expression) extends GeomPairToBool {
-  def fname = "disjoint"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.disjoint(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
+case class StContains(children: Args) extends GeomCall("contains", BooleanType)
+case class StWithin(children: Args) extends GeomCall("within", BooleanType)
+case class StIntersects(children: Args) extends GeomCall("intersects", BooleanType)
+case class StDisjoint(children: Args) extends GeomCall("disjoint", BooleanType)
 /** Hot-path PIP with raw coordinates (join refine stage). */
-case class StContainsXY(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "containsXY"
-  override def dataType: DataType = BooleanType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.containsXY(a.asInstanceOf[InternalRow], b.asInstanceOf[Double], c.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
-case class StIntersectsXY(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "intersectsXY"
-  override def dataType: DataType = BooleanType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.intersectsXY(a.asInstanceOf[InternalRow], b.asInstanceOf[Double], c.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
+case class StContainsXY(children: Args) extends GeomCall("containsXY", BooleanType)
+case class StIntersectsXY(children: Args) extends GeomCall("intersectsXY", BooleanType)
 
 // ------------------------------------------------------ binary measures
 
-abstract class GeomPairToDouble extends GeomBinaryExpr {
-  override def dataType: DataType = DoubleType
-}
-
-case class StDistance(left: Expression, right: Expression) extends GeomPairToDouble {
-  def fname = "distance"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.distance(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StDistanceSphere(left: Expression, right: Expression) extends GeomPairToDouble {
-  def fname = "distanceSphere"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.distanceSphere(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StDistanceRhumb(left: Expression, right: Expression) extends GeomPairToDouble {
-  def fname = "distanceRhumb"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.distanceRhumb(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StDistanceGeodesic(left: Expression, right: Expression) extends GeomPairToDouble {
-  def fname = "distanceGeodesic"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.distanceGeodesic(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StBearing(left: Expression, right: Expression) extends GeomPairToDouble {
-  def fname = "bearing"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.bearing(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StBearingRhumb(left: Expression, right: Expression) extends GeomPairToDouble {
-  def fname = "bearingRhumb"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.bearingRhumb(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StBearingGeodesic(left: Expression, right: Expression) extends GeomPairToDouble {
-  def fname = "bearingGeodesic"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.bearingGeodesic(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StHausdorff(left: Expression, right: Expression) extends GeomPairToDouble {
-  def fname = "hausdorff"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.hausdorff(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StFrechet(left: Expression, right: Expression) extends GeomPairToDouble {
-  def fname = "frechet"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.frechet(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StLineLocatePoint(left: Expression, right: Expression) extends GeomPairToDouble {
-  def fname = "lineLocatePoint"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.lineLocatePoint(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-case class StClosestPoint(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "closestPoint"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.closestPoint(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StLineIntersection(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "lineIntersection"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.lineIntersection(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
+case class StDistance(children: Args) extends GeomCall("distance", DoubleType)
+case class StDistanceSphere(children: Args) extends GeomCall("distanceSphere", DoubleType)
+case class StDistanceRhumb(children: Args) extends GeomCall("distanceRhumb", DoubleType)
+case class StDistanceGeodesic(children: Args) extends GeomCall("distanceGeodesic", DoubleType)
+case class StBearing(children: Args) extends GeomCall("bearing", DoubleType)
+case class StBearingRhumb(children: Args) extends GeomCall("bearingRhumb", DoubleType)
+case class StBearingGeodesic(children: Args) extends GeomCall("bearingGeodesic", DoubleType)
+case class StHausdorff(children: Args) extends GeomCall("hausdorff", DoubleType)
+case class StFrechet(children: Args) extends GeomCall("frechet", DoubleType)
+case class StLineLocatePoint(children: Args) extends GeomCall("lineLocatePoint", DoubleType)
+case class StClosestPoint(children: Args) extends GeomCall("closestPoint", Geom)
+case class StLineIntersection(children: Args) extends GeomCall("lineIntersection", Geom)
 
 // ----------------------------------------------- geom + scalar -> geom
 
-case class StVoronoi(child: Expression) extends GeomUnaryExpr {
-  def fname = "voronoi"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  protected def evalFn(v: Any) = GeomEval.voronoi(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
+case class StVoronoi(children: Args) extends GeomCall("voronoi", Geoms)
+/** st_voronoi(geom, minx, miny, maxx, maxy) — explicit clip window.
+  * Like StAffine it keeps the class-derived prettyName that plan text
+  * and unaliased output column names already carry. */
+case class StVoronoiClip(children: Args) extends GeomCall("voronoiClip", Geoms) {
+  override def prettyName: String = "stvoronoiclip"
 }
-/** st_voronoi(geom, minx, miny, maxx, maxy) — explicit clip window. */
-case class StVoronoiClip(children: Seq[Expression]) extends Expression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback with Serializable {
-  require(children.length == 5, "st_voronoi takes (geom[, minx, miny, maxx, maxy])")
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) null
-    else GeomEval.voronoiClip(vs(0).asInstanceOf[InternalRow],
-      vs(1).asInstanceOf[Double], vs(2).asInstanceOf[Double],
-      vs(3).asInstanceOf[Double], vs(4).asInstanceOf[Double])
+case class StShortestLine(children: Args) extends GeomCall("shortestLine", Geom)
+case class StSnap(children: Args) extends GeomCall("snapTo", Geom)
+case class StLineSubstring(children: Args) extends GeomCall("lineSubstring", Geom)
+case class StReverse(children: Args) extends GeomCall("reverseGeom", Geom)
+case class StExteriorRing(children: Args) extends GeomCall("exteriorRing", Geom)
+case class StNumInteriorRings(children: Args) extends GeomCall("numInteriorRings", IntegerType)
+case class StInteriorRingN(children: Args) extends GeomCall("interiorRingN", Geom)
+case class StPointN(children: Args) extends GeomCall("pointN", Geom)
+case class StStartPoint(children: Args) extends GeomCall("startPoint", Geom)
+case class StEndPoint(children: Args) extends GeomCall("endPoint", Geom)
+case class StGeometryN(children: Args) extends GeomCall("geometryN", Geom)
+case class StDumpRings(children: Args) extends GeomCall("dumpRings", Geoms)
+case class StMaxDistance(children: Args) extends GeomCall("maxDistance", DoubleType) {
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nanIsNull(ctx, ev, "maxDistanceRaw")
+}
+case class StLongestLine(children: Args) extends GeomCall("longestLine", Geom)
+case class StAddPoint(children: Args) extends GeomCall("addPoint", Geom)
+case class StSetPoint(children: Args) extends GeomCall("setPoint", Geom)
+case class StRemovePoint(children: Args) extends GeomCall("removePoint", Geom)
+case class StFlipCoordinates(children: Args) extends GeomCall("flipCoordinates", Geom)
+case class StIsClosed(children: Args) extends GeomCall("isClosed", BooleanType)
+case class StIsSimple(children: Args) extends GeomCall("isSimple", BooleanType)
+case class StIsRing(children: Args) extends GeomCall("isRing", BooleanType) {
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = nullSafeCall(ctx, ev) { args =>
+    val raw = ctx.freshName("isRingRaw") // -1 = NULL, 0 = false, 1 = true
+    s"""byte $raw = graft.sql.GeomEval.isRingRaw(${args.head});
+       |${ev.isNull} = $raw < 0;
+       |${ev.value} = $raw == 1;""".stripMargin
   }
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression = copy(newChildren)
 }
-case class StShortestLine(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "shortestLine"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.shortestLine(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
+case class StMulti(children: Args) extends GeomCall("toMulti", Geom)
+case class StPoints(children: Args) extends GeomCall("pointsOf", Geom)
+case class StBoundingDiagonal(children: Args) extends GeomCall("boundingDiagonal", Geom)
+case class StScroll(children: Args) extends GeomCall("scroll", Geom)
+case class StShiftLongitude(children: Args) extends GeomCall("shiftLongitude", Geom)
+case class StMinimumBoundingCircle(children: Args) extends GeomCall("minimumBoundingCircle", Geom)
+case class StMinimumBoundingRadius(children: Args)
+    extends GeomCall("minimumBoundingRadius", CenterRadius)
+case class StHexBin(children: Args) extends GeomCall("hexBin", HexCell)
+case class StHexBinCenter(children: Args) extends GeomCall("hexBinCenter", Geom)
+case class StHexagon(children: Args) extends GeomCall("hexagonCell", Geom)
+case class StSharedPaths(children: Args) extends GeomCall("sharedPaths", Geoms)
+case class StLineCrossingDirection(children: Args)
+    extends GeomCall("lineCrossingDirection", IntegerType) {
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = nullSafeCall(ctx, ev) { args =>
+    val raw = ctx.freshName("lcdRaw") // Integer.MIN_VALUE = NULL
+    s"""int $raw = graft.kernels.SharedPaths.crossingDirection(
+       |  graft.sql.GeomSchema.fromRow(${args(0)}), graft.sql.GeomSchema.fromRow(${args(1)}));
+       |${ev.isNull} = $raw == Integer.MIN_VALUE;
+       |${ev.value} = $raw;""".stripMargin
+  }
 }
-case class StSnap(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "snapTo"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.snapTo(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow],
-      c.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
-case class StLineSubstring(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "lineSubstring"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true // non-line / out-of-range fractions
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.lineSubstring(a.asInstanceOf[InternalRow],
-      b.asInstanceOf[Double], c.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
-case class StReverse(child: Expression) extends GeomUnaryExpr {
-  def fname = "reverseGeom"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.reverseGeom(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StExteriorRing(child: Expression) extends GeomUnaryExpr {
-  def fname = "exteriorRing"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.exteriorRing(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StNumInteriorRings(child: Expression) extends GeomUnaryExpr {
-  def fname = "numInteriorRings"
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.numInteriorRings(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StInteriorRingN(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "interiorRingN"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.interiorRingN(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StPointN(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "pointN"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.pointN(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StStartPoint(child: Expression) extends GeomUnaryExpr {
-  def fname = "startPoint"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.startPoint(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StEndPoint(child: Expression) extends GeomUnaryExpr {
-  def fname = "endPoint"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.endPoint(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StGeometryN(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "geometryN"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.geometryN(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StDumpRings(child: Expression) extends GeomUnaryExpr {
-  def fname = "dumpRings"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  protected def evalFn(v: Any) = GeomEval.dumpRings(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StMaxDistance(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "maxDistance"
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.maxDistance(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StMakeLine(children: Args) extends GeomCall("makeLine", Geom)
+case class StAngle(children: Args) extends GeomCall("angle3", DoubleType) {
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""
-         |${ev.value} = graft.sql.GeomEval.maxDistanceRaw($a, $b);
-         |${ev.isNull} = Double.isNaN(${ev.value});
-       """.stripMargin)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
+    nanIsNull(ctx, ev, "angle3Raw")
 }
-case class StLongestLine(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "longestLine"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.longestLine(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StAddPoint(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "addPoint"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.addPoint(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow],
-      c.asInstanceOf[Int])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-      c: Expression): Expression = copy(a, b, c)
-}
-case class StSetPoint(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "setPoint"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.setPoint(a.asInstanceOf[InternalRow], b.asInstanceOf[Int],
-      c.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-      c: Expression): Expression = copy(a, b, c)
-}
-case class StRemovePoint(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "removePoint"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.removePoint(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StFlipCoordinates(child: Expression) extends GeomUnaryExpr {
-  def fname = "flipCoordinates"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.flipCoordinates(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StIsClosed(child: Expression) extends GeomUnaryExpr {
-  def fname = "isClosed"
-  override def dataType: DataType = BooleanType
-  protected def evalFn(v: Any) = GeomEval.isClosed(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StIsSimple(child: Expression) extends GeomUnaryExpr {
-  def fname = "isSimple"
-  override def dataType: DataType = BooleanType
-  protected def evalFn(v: Any) = GeomEval.isSimple(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StIsRing(child: Expression) extends GeomUnaryExpr {
-  def fname = "isRing"
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.isRing(v.asInstanceOf[InternalRow])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val raw = ctx.freshName("isRingRaw")
-      s"""
-         |byte $raw = graft.sql.GeomEval.isRingRaw($c);
-         |${ev.isNull} = $raw < 0;
-         |${ev.value} = $raw == 1;
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StMulti(child: Expression) extends GeomUnaryExpr {
-  def fname = "toMulti"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.toMulti(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StPoints(child: Expression) extends GeomUnaryExpr {
-  def fname = "pointsOf"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.pointsOf(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StBoundingDiagonal(child: Expression) extends GeomUnaryExpr {
-  def fname = "boundingDiagonal"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.boundingDiagonal(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StScroll(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "scroll"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.scroll(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StShiftLongitude(child: Expression) extends GeomUnaryExpr {
-  def fname = "shiftLongitude"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.shiftLongitude(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StMinimumBoundingCircle(left: Expression, right: Expression)
-    extends GeomBinaryExpr {
-  def fname = "minimumBoundingCircle"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.minimumBoundingCircle(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StMinimumBoundingRadius(child: Expression) extends GeomUnaryExpr {
-  def fname = "minimumBoundingRadius"
-  override def dataType: DataType = StructType(Seq(
-    StructField("center", GeomExprs.geomType, nullable = false),
-    StructField("radius", DoubleType, nullable = false)))
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.minimumBoundingRadius(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StHexBin(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "hexBin"
-  override def dataType: DataType = StructType(Seq(
-    StructField("q", LongType, nullable = false),
-    StructField("r", LongType, nullable = false)))
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.hexBin(a.asInstanceOf[Double], b.asInstanceOf[Double], c.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-      c: Expression): Expression = copy(a, b, c)
-}
-case class StHexBinCenter(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "hexBinCenter"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.hexBinCenter(a.asInstanceOf[Long], b.asInstanceOf[Long], c.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-      c: Expression): Expression = copy(a, b, c)
-}
-case class StHexagon(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "hexagonCell"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.hexagonCell(a.asInstanceOf[Long], b.asInstanceOf[Long], c.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-      c: Expression): Expression = copy(a, b, c)
-}
-case class StSharedPaths(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "sharedPaths"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.sharedPaths(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StLineCrossingDirection(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "lineCrossingDirection"
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.lineCrossingDirection(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val raw = ctx.freshName("lcdRaw")
-      s"""
-         |int $raw = graft.kernels.SharedPaths.crossingDirection(
-         |  graft.sql.GeomSchema.fromRow($a), graft.sql.GeomSchema.fromRow($b));
-         |${ev.isNull} = $raw == Integer.MIN_VALUE;
-         |${ev.value} = $raw;
-       """.stripMargin
-    })
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StMakeLine(child: Expression) extends GeomUnaryExpr {
-  def fname = "makeLine"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) =
-    GeomEval.makeLine(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StAngle(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "angle3"
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.angle3(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow],
-      c.asInstanceOf[InternalRow])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c) =>
-      s"""
-         |${ev.value} = graft.sql.GeomEval.angle3Raw($a, $b, $c);
-         |${ev.isNull} = Double.isNaN(${ev.value});
-       """.stripMargin)
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-      c: Expression): Expression = copy(a, b, c)
-}
-case class StExpand(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "expandEnvelope"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.expandEnvelope(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StNormalize(child: Expression) extends GeomUnaryExpr {
-  def fname = "normalizeGeom"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.normalizeGeom(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StSplit(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "splitBy"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.splitBy(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StMakeValid(child: Expression) extends GeomUnaryExpr {
-  def fname = "makeValid"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.makeValid(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StOffsetCurve(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "offsetCurve"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.offsetCurve(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StLineMerge(child: Expression) extends GeomUnaryExpr {
-  def fname = "lineMerge"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.lineMerge(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StNode(child: Expression) extends GeomUnaryExpr {
-  def fname = "nodeLines"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.nodeLines(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-abstract class GeomCircleExpr extends GeomBinaryExpr {
-  override def nullable: Boolean = true // non-areal / degenerate input
-  override def dataType: DataType = StructType(Seq(
-    StructField("center", GeomExprs.geomType),
-    StructField("nearest", GeomExprs.geomType),
-    StructField("radius", DoubleType)))
-}
-case class StMaximumInscribedCircle(left: Expression, right: Expression) extends GeomCircleExpr {
-  def fname = "maximumInscribedCircle"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.maximumInscribedCircle(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StLargestEmptyCircle(left: Expression, right: Expression) extends GeomCircleExpr {
-  def fname = "largestEmptyCircle"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.largestEmptyCircle(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StSubdivide(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "subdivide"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.subdivide(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StBuffer(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "buffer"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true // NaN/Infinity distance -> null
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.buffer(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
+case class StExpand(children: Args) extends GeomCall("expandEnvelope", Geom)
+case class StNormalize(children: Args) extends GeomCall("normalizeGeom", Geom)
+case class StSplit(children: Args) extends GeomCall("splitBy", Geoms)
+case class StMakeValid(children: Args) extends GeomCall("makeValid", Geom)
+case class StOffsetCurve(children: Args) extends GeomCall("offsetCurve", Geom)
+case class StLineMerge(children: Args) extends GeomCall("lineMerge", Geom)
+case class StNode(children: Args) extends GeomCall("nodeLines", Geom)
+case class StMaximumInscribedCircle(children: Args) extends GeomCall("maximumInscribedCircle", Circle)
+case class StLargestEmptyCircle(children: Args) extends GeomCall("largestEmptyCircle", Circle)
+case class StSubdivide(children: Args) extends GeomCall("subdivide", Geoms)
+case class StBuffer(children: Args) extends GeomCall("buffer", Geom)
 /** st_buffer(geom, dist, 'quad_segs=8 endcap=flat join=mitre
   * mitre_limit=5') — the PostGIS buffer-style parameter string. */
-case class StBufferStyle(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "bufferStyle"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true // malformed style string -> null
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.bufferStyle(a.asInstanceOf[InternalRow], b.asInstanceOf[Double],
-      c.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
-case class StSimplify(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "simplify"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.simplify(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StSimplifyVw(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "simplifyVw"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.simplifyVw(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StSimplifyIdx(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "simplifyIdx"
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true // LineString-only contract
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.simplifyIdx(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StSimplifyVwIdx(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "simplifyVwIdx"
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true // LineString-only contract
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.simplifyVwIdx(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StDensify(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "densify"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.densify(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StDensifyHaversine(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "densifyHaversine"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.densifyHaversine(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StDensifyRhumb(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "densifyRhumb"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.densifyRhumb(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StDensifyGeodesic(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "densifyGeodesic"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.densifyGeodesic(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StChaikin(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "chaikin"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.chaikin(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StRotate(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "rotate"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.rotate(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StGrahamHull(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "grahamHull"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.grahamHull(a.asInstanceOf[InternalRow], b.asInstanceOf[Boolean])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StLineInterpolatePoint(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "lineInterpolatePoint"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.lineInterpolatePoint(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
+case class StBufferStyle(children: Args) extends GeomCall("bufferStyle", Geom)
+case class StSimplify(children: Args) extends GeomCall("simplify", Geom)
+case class StSimplifyVw(children: Args) extends GeomCall("simplifyVw", Geom)
+case class StSimplifyIdx(children: Args) extends GeomCall("simplifyIdx", Ints)
+case class StSimplifyVwIdx(children: Args) extends GeomCall("simplifyVwIdx", Ints)
+case class StDensify(children: Args) extends GeomCall("densify", Geom)
+case class StDensifyHaversine(children: Args) extends GeomCall("densifyHaversine", Geom)
+case class StDensifyRhumb(children: Args) extends GeomCall("densifyRhumb", Geom)
+case class StDensifyGeodesic(children: Args) extends GeomCall("densifyGeodesic", Geom)
+case class StChaikin(children: Args) extends GeomCall("chaikin", Geom)
+case class StRotate(children: Args) extends GeomCall("rotate", Geom)
+case class StGrahamHull(children: Args) extends GeomCall("grahamHull", Geom)
+case class StLineInterpolatePoint(children: Args) extends GeomCall("lineInterpolatePoint", Geom)
 
 // ------------------------------------------------------------- ternary
 
-case class StProject(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "project"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.project(a.asInstanceOf[InternalRow], b.asInstanceOf[Double], c.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
-case class StProjectRhumb(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "projectRhumb"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.projectRhumb(a.asInstanceOf[InternalRow], b.asInstanceOf[Double], c.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
-case class StProjectGeodesic(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "projectGeodesic"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.projectGeodesic(a.asInstanceOf[InternalRow], b.asInstanceOf[Double], c.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
-case class StTranslate(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "translate"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.translate(a.asInstanceOf[InternalRow], b.asInstanceOf[Double], c.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
-case class StScale(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "scale"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.scale(a.asInstanceOf[InternalRow], b.asInstanceOf[Double], c.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
-case class StSkew(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "skew"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.skew(a.asInstanceOf[InternalRow], b.asInstanceOf[Double], c.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
-case class StCrossTrack(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "crossTrack"
-  override def dataType: DataType = DoubleType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.crossTrack(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow], c.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
-case class StLineInterpolateSphere(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "lineInterpolateSphere"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.lineInterpolateSphere(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow], c.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
-case class StLineInterpolateRhumb(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "lineInterpolateRhumb"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.lineInterpolateRhumb(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow], c.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
-case class StLineInterpolateGeodesic(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "lineInterpolateGeodesic"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.lineInterpolateGeodesic(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow], c.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
-
-/** Full 2×3 affine: st_affine(geom, a, b, xoff, d, e, yoff). Cold path
-  * (setup transforms), so CodegenFallback is acceptable here. */
-case class StAffine(children: Seq[Expression]) extends Expression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback with Serializable {
-  require(children.length == 7, "st_affine takes (geom, a, b, xoff, d, e, yoff)")
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) null
-    else GeomEval.affine(vs(0).asInstanceOf[InternalRow],
-      vs(1).asInstanceOf[Double], vs(2).asInstanceOf[Double], vs(3).asInstanceOf[Double],
-      vs(4).asInstanceOf[Double], vs(5).asInstanceOf[Double], vs(6).asInstanceOf[Double])
-  }
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression = copy(newChildren)
+case class StProject(children: Args) extends GeomCall("project", Geom)
+case class StProjectRhumb(children: Args) extends GeomCall("projectRhumb", Geom)
+case class StProjectGeodesic(children: Args) extends GeomCall("projectGeodesic", Geom)
+case class StTranslate(children: Args) extends GeomCall("translate", Geom)
+case class StScale(children: Args) extends GeomCall("scale", Geom)
+case class StSkew(children: Args) extends GeomCall("skew", Geom)
+case class StCrossTrack(children: Args) extends GeomCall("crossTrack", DoubleType)
+case class StLineInterpolateSphere(children: Args) extends GeomCall("lineInterpolateSphere", Geom)
+case class StLineInterpolateRhumb(children: Args) extends GeomCall("lineInterpolateRhumb", Geom)
+case class StLineInterpolateGeodesic(children: Args)
+    extends GeomCall("lineInterpolateGeodesic", Geom)
+/** Full 2×3 affine: st_affine(geom, a, b, xoff, d, e, yoff). */
+case class StAffine(children: Args) extends GeomCall("affine", Geom) {
+  override def prettyName: String = "staffine"
 }
 
 // ------------------------------------------------ wkb / validation
 
-case class StGeomFromWkb(child: Expression) extends GeomUnaryExpr {
-  def fname = "geomFromWkb"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.geomFromWkb(v.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
+case class StGeomFromWkb(children: Args) extends GeomCall("geomFromWkb", Geom)
 /** Lossy 2-D parse: EWKB flags / ISO Z/M type codes accepted, extra
   * ordinates dropped. */
-case class StGeomFromWkbForce2D(child: Expression) extends GeomUnaryExpr {
-  def fname = "geomFromWkbForce2D"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.geomFromWkbForce2D(v.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StAsWkb(child: Expression) extends GeomUnaryExpr {
-  def fname = "asWkb"
-  override def dataType: DataType = BinaryType
-  protected def evalFn(v: Any) = GeomEval.asWkb(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
+case class StGeomFromWkbForce2D(children: Args) extends GeomCall("geomFromWkbForce2D", Geom)
+case class StAsWkb(children: Args) extends GeomCall("asWkb", BinaryType)
 /** PostGIS extended WKB with an SRID tag (geo-postgis wire format,
   * to_postgis.rs:12). */
-case class StAsEwkb(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "asEwkb"
-  override def dataType: DataType = BinaryType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.asEwkb(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
+case class StAsEwkb(children: Args) extends GeomCall("asEwkb", BinaryType)
 /** SRID of an (E)WKB payload; 0 for plain WKB. */
-case class StSrid(child: Expression) extends GeomUnaryExpr {
-  def fname = "sridOf"
-  override def dataType: DataType = IntegerType
-  protected def evalFn(v: Any) = GeomEval.sridOf(v.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StIsValid(child: Expression) extends GeomUnaryExpr {
-  def fname = "isValid"
-  override def dataType: DataType = BooleanType
-  protected def evalFn(v: Any) = GeomEval.isValid(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StIsValidReason(child: Expression) extends GeomUnaryExpr {
-  def fname = "isValidReason"
-  override def dataType: DataType = StringType
-  protected def evalFn(v: Any) = GeomEval.isValidReason(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StSimplifyVwPreserve(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "simplifyVwPreserve"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.simplifyVwPreserve(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
+case class StSrid(children: Args) extends GeomCall("sridOf", IntegerType)
+case class StIsValid(children: Args) extends GeomCall("isValid", BooleanType)
+case class StIsValidReason(children: Args) extends GeomCall("isValidReason", StringType)
+case class StSimplifyVwPreserve(children: Args) extends GeomCall("simplifyVwPreserve", Geom)
 
 // ------------------------------------------------------------- overlay
 
-abstract class GeomPairToGeom extends GeomBinaryExpr {
-  override def dataType: DataType = GeomExprs.geomType
-}
-
-case class StIntersection(left: Expression, right: Expression) extends GeomPairToGeom {
-  def fname = "intersection"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.intersection(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
+case class StIntersection(children: Args) extends GeomCall("intersection", Geom)
 /** Heterogeneous boolean op over ANY dimension mix — points, lines,
   * polygons (kernels/Hetero; beyond the reference: geo's BooleanOps is
   * polygon×polygon + 1-D clip only, bool_ops/mod.rs:86-106). Result is
   * the array<geom> collection form [polygonal?, linework?, points?]
   * with empty components omitted (JTS OverlayNG mixed-input
   * semantics). */
-case class StOverlayHetero(left: Expression, right: Expression, op: Int)
-    extends GeomBinaryExpr {
-  def fname = op match {
-    case graft.kernels.Overlay.OpIntersection => "heteroIntersection"
-    case graft.kernels.Overlay.OpUnion => "heteroUnion"
-    case graft.kernels.Overlay.OpDifference => "heteroDifference"
+case class StOverlayHetero(children: Args, op: Int) extends GeomCall(op match {
+    case Overlay.OpIntersection => "heteroIntersection"
+    case Overlay.OpUnion => "heteroUnion"
+    case Overlay.OpDifference => "heteroDifference"
     case _ => "heteroSymDifference"
-  }
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) = op match {
-    case graft.kernels.Overlay.OpIntersection =>
-      GeomEval.heteroIntersection(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-    case graft.kernels.Overlay.OpUnion =>
-      GeomEval.heteroUnion(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-    case graft.kernels.Overlay.OpDifference =>
-      GeomEval.heteroDifference(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-    case _ =>
-      GeomEval.heteroSymDifference(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(l, r)
+  }, Geoms) {
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
+    copy(children = c)
 }
-case class StUnion(left: Expression, right: Expression) extends GeomPairToGeom {
-  def fname = "union"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.union(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StDifference(left: Expression, right: Expression) extends GeomPairToGeom {
-  def fname = "difference"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.difference(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StSymDifference(left: Expression, right: Expression) extends GeomPairToGeom {
-  def fname = "symDifference"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.symDifference(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StClip(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "clip"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.clip(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow], c.asInstanceOf[Boolean])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
-case class StSnapToGrid(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "snapToGrid"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.snapToGrid(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
+case class StUnion(children: Args) extends GeomCall("union", Geom)
+case class StDifference(children: Args) extends GeomCall("difference", Geom)
+case class StSymDifference(children: Args) extends GeomCall("symDifference", Geom)
+case class StClip(children: Args) extends GeomCall("clip", Geom)
+case class StSnapToGrid(children: Args) extends GeomCall("snapToGrid", Geom)
 /** Fixed-precision (snap-rounded) boolean op — children are
   * (a, b, scale); `op`/`linework` are compile-time parameters baked
   * into the generated call so the expression stays a plain ternary
   * inside whole-stage codegen. */
-case class StBooleanSr(first: Expression, second: Expression, third: Expression,
-    op: Int, linework: Boolean) extends TernaryExpression with Serializable {
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    GeomEval.booleanSr(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow],
-      c.asInstanceOf[Double], op, linework)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c) =>
-      s"graft.sql.GeomEval.booleanSr($a, $b, $c, $op, $linework)")
+case class StBooleanSr(children: Args, op: Int, linework: Boolean)
+    extends GeomCall("booleanSr", Geom) {
+  override protected def constArgs: Seq[Any] = Seq(op, linework)
   override def prettyName: String = if (linework) "booleanSrLines" else "booleanSr"
-  override protected def withNewChildrenInternal(
-      a: Expression, b: Expression, c: Expression): Expression =
-    copy(first = a, second = b, third = c)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
+    copy(children = c)
 }
-
 /** CRS reprojection from published formulas (kernels/Crs — beyond the
   * executed reference: geo feature-gates reprojection onto a C library,
   * proj.rs:2). Supported SRIDs: 4326, 3857, 28992 (RD New),
   * 32601–32660 / 32701–32760 (UTM). Unsupported SRIDs raise. */
-case class StTransform(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with Serializable {
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    GeomEval.transformSrid(a.asInstanceOf[InternalRow],
-      b.asInstanceOf[Int], c.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c) => s"graft.sql.GeomEval.transformSrid($a, $b, $c)")
-  override def prettyName: String = "transformSrid"
-  override protected def withNewChildrenInternal(
-      a: Expression, b: Expression, c: Expression): Expression =
-    copy(first = a, second = b, third = c)
-}
-
-case class StUnionAll(child: Expression) extends GeomUnaryExpr {
-  def fname = "unionAll"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) =
-    GeomEval.unionAll(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
+case class StTransform(children: Args) extends GeomCall("transformSrid", Geom)
+case class StUnionAll(children: Args) extends GeomCall("unionAll", Geom)
 /** Dimension-weighted centroid of an array<geom> collection (the JTS
   * Centroid rule over a GeometryCollection — highest dimension wins). */
-case class StCollectionCentroid(child: Expression) extends GeomUnaryExpr {
-  def fname = "collectionCentroid"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) =
-    GeomEval.collectionCentroid(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
+case class StCollectionCentroid(children: Args) extends GeomCall("collectionCentroid", Geom)
 
 // -------------------------------------------------------------- relate
 
-case class StRelate(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "relate"
-  override def dataType: DataType = StringType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.relate(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StRelateMatch(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "relateMatch"
-  override def dataType: DataType = BooleanType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.relateMatch(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow],
-      c.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
-case class StTouches(left: Expression, right: Expression) extends GeomPairToBool {
-  def fname = "touches"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.touches(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StCrosses(left: Expression, right: Expression) extends GeomPairToBool {
-  def fname = "crosses"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.crosses(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StOverlaps(left: Expression, right: Expression) extends GeomPairToBool {
-  def fname = "overlaps"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.overlaps(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StCovers(left: Expression, right: Expression) extends GeomPairToBool {
-  def fname = "covers"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.covers(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StCoveredBy(left: Expression, right: Expression) extends GeomPairToBool {
-  def fname = "coveredBy"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.coveredBy(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StEqualsTopo(left: Expression, right: Expression) extends GeomPairToBool {
-  def fname = "equalsTopo"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.equalsTopo(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
+case class StRelate(children: Args) extends GeomCall("relate", StringType)
+case class StRelateMatch(children: Args) extends GeomCall("relateMatch", BooleanType)
+case class StTouches(children: Args) extends GeomCall("touches", BooleanType)
+case class StCrosses(children: Args) extends GeomCall("crosses", BooleanType)
+case class StOverlaps(children: Args) extends GeomCall("overlaps", BooleanType)
+case class StCovers(children: Args) extends GeomCall("covers", BooleanType)
+case class StCoveredBy(children: Args) extends GeomCall("coveredBy", BooleanType)
+case class StEqualsTopo(children: Args) extends GeomCall("equalsTopo", BooleanType)
 
 // ------------------------------------------------------- shapes (v1.1)
 
-case class StConcaveHull(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "concaveHull"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.concaveHull(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StKnnConcaveHull(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "knnConcaveHull"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.knnConcaveHull(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StMinRotatedRect(child: Expression) extends GeomToGeom {
-  def fname = "minRotatedRect"
-  protected def evalFn(v: Any) = GeomEval.minRotatedRect(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StTriangulate(child: Expression) extends GeomUnaryExpr {
-  def fname = "triangulate"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  protected def evalFn(v: Any) = GeomEval.triangulate(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StDelaunay(child: Expression) extends GeomUnaryExpr {
-  def fname = "delaunay"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  protected def evalFn(v: Any) = GeomEval.delaunay(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StDelaunayUnconstrained(child: Expression) extends GeomUnaryExpr {
-  def fname = "delaunayUnconstrained"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  protected def evalFn(v: Any) = GeomEval.delaunayUnconstrained(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StStitch(child: Expression) extends GeomUnaryExpr {
-  def fname = "stitch"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) =
-    GeomEval.stitch(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StSegmentize(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "segmentize"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.segmentize(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StSegmentizeSphere(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "segmentizeSphere"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.segmentizeSphere(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StDimension(child: Expression) extends GeomUnaryExpr {
-  def fname = "dimension"
-  override def dataType: DataType = IntegerType
-  protected def evalFn(v: Any) = GeomEval.dimension(v.asInstanceOf[InternalRow])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StClosestPointSphere(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "closestPointSphere"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.closestPointSphere(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StDistanceVincenty(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "distanceVincenty"
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.distanceVincenty(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  // stay inside whole-stage codegen: call the primitive-returning
-  // kernel and surface Vincenty non-convergence (NaN) as SQL NULL
+case class StConcaveHull(children: Args) extends GeomCall("concaveHull", Geom)
+case class StKnnConcaveHull(children: Args) extends GeomCall("knnConcaveHull", Geom)
+case class StMinRotatedRect(children: Args) extends GeomCall("minRotatedRect", Geom)
+case class StTriangulate(children: Args) extends GeomCall("triangulate", Geoms)
+case class StDelaunay(children: Args) extends GeomCall("delaunay", Geoms)
+case class StDelaunayUnconstrained(children: Args) extends GeomCall("delaunayUnconstrained", Geoms)
+case class StStitch(children: Args) extends GeomCall("stitch", Geom)
+case class StSegmentize(children: Args) extends GeomCall("segmentize", Geom)
+case class StSegmentizeSphere(children: Args) extends GeomCall("segmentizeSphere", Geom)
+case class StDimension(children: Args) extends GeomCall("dimension", IntegerType)
+case class StClosestPointSphere(children: Args) extends GeomCall("closestPointSphere", Geom)
+case class StDistanceVincenty(children: Args) extends GeomCall("distanceVincenty", DoubleType) {
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""
-         |${ev.value} = graft.sql.GeomEval.distanceVincentyRaw($a, $b);
-         |${ev.isNull} = Double.isNaN(${ev.value});
-       """.stripMargin)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
+    nanIsNull(ctx, ev, "distanceVincentyRaw")
 }
-
 /** PostGIS ST_Azimuth: planar angle in radians clockwise from north
   * of the segment a→b, in [0, 2π); NULL for non-point, empty or
   * coincident inputs. */
-case class StAzimuth(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "azimuth"
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.azimuth(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StAzimuth(children: Args) extends GeomCall("azimuth", DoubleType) {
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""
-         |${ev.value} = graft.sql.GeomEval.azimuthRaw($a, $b);
-         |${ev.isNull} = Double.isNaN(${ev.value});
-       """.stripMargin)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
+    nanIsNull(ctx, ev, "azimuthRaw")
 }
-
 /** Merge an array of geometries (e.g. from collect_list) into one
   * MultiPoint of all their coordinates — the bridge that turns the
   * built-in collect aggregates into geometric aggregations
   * (hull_agg = st_convexhull ∘ st_collect ∘ collect_list). */
-case class StCollectPoints(child: Expression) extends GeomUnaryExpr {
-  def fname = "collectPoints"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) =
-    GeomEval.collectPoints(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
+case class StCollectPoints(children: Args) extends GeomCall("collectPoints", Geom)
 
 // --------------------------------------------------------------- cells
 
-case class StCellId(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "cellId"
-  override def dataType: DataType = LongType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.cellId(a.asInstanceOf[Int], b.asInstanceOf[Double], c.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
-case class StCellOfGeom(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "cellOfGeomCentroid"
-  override def dataType: DataType = LongType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.cellOfGeomCentroid(a.asInstanceOf[Int], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StCovering(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "covering"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.covering(a.asInstanceOf[Int], b.asInstanceOf[InternalRow])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StCellBounds(child: Expression) extends GeomUnaryExpr {
-  def fname = "cellBounds"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.cellBounds(v.asInstanceOf[Long])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StCellParent(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "cellParent"
-  override def dataType: DataType = LongType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.cellParent(a.asInstanceOf[Long], b.asInstanceOf[Int])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StCellLevel(child: Expression) extends GeomUnaryExpr {
-  def fname = "cellLevel"
-  override def dataType: DataType = IntegerType
-  protected def evalFn(v: Any) = GeomEval.cellLevel(v.asInstanceOf[Long])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StCellChildren(child: Expression) extends GeomUnaryExpr {
-  def fname = "cellChildren"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  protected def evalFn(v: Any) = GeomEval.cellChildren(v.asInstanceOf[Long])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StCellCompact(child: Expression) extends GeomUnaryExpr {
-  def fname = "cellCompact"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  protected def evalFn(v: Any) =
-    GeomEval.cellCompact(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StGeohash(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "geohashEncode"
-  override def dataType: DataType = StringType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.geohashEncode(a.asInstanceOf[Double], b.asInstanceOf[Double], c.asInstanceOf[Int])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
-case class StGeohashNeighbors(child: Expression) extends GeomUnaryExpr {
-  def fname = "geohashNeighbors"
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) =
-    GeomEval.geohashNeighbors(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StGeohashRect(child: Expression) extends GeomUnaryExpr {
-  def fname = "geohashRect"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) =
-    GeomEval.geohashRect(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StCellUncompact(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "cellUncompact"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.cellUncompact(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[Int])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
+case class StCellId(children: Args) extends GeomCall("cellId", LongType)
+case class StCellOfGeom(children: Args) extends GeomCall("cellOfGeomCentroid", LongType)
+case class StCovering(children: Args) extends GeomCall("covering", Longs)
+case class StCellBounds(children: Args) extends GeomCall("cellBounds", Geom)
+case class StCellParent(children: Args) extends GeomCall("cellParent", LongType)
+case class StCellLevel(children: Args) extends GeomCall("cellLevel", IntegerType)
+case class StCellChildren(children: Args) extends GeomCall("cellChildren", Longs)
+case class StCellCompact(children: Args) extends GeomCall("cellCompact", Longs)
+case class StGeohash(children: Args) extends GeomCall("geohashEncode", StringType)
+case class StGeohashNeighbors(children: Args) extends GeomCall("geohashNeighbors", Strings)
+case class StGeohashRect(children: Args) extends GeomCall("geohashRect", Geom)
+case class StCellUncompact(children: Args) extends GeomCall("cellUncompact", Longs)
 /** Distinct cells within Chebyshev index distance `ring` of the cell
   * containing (lon, lat) — integer index arithmetic (antimeridian wrap,
   * pole-row drop), never re-encoded offset coordinates, so the DWithin
   * ring-coverage guarantee holds at cell-edge ulps. */
-case class StCellNeighborhood(first: Expression, second: Expression,
-    third: Expression, fourth: Expression)
-    extends QuaternaryExpression with ImplicitCastInputTypes with Serializable {
-  override def inputTypes: Seq[DataType] =
-    Seq(IntegerType, DoubleType, DoubleType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-    GeomEval.cellNeighborhood(a.asInstanceOf[Int], b.asInstanceOf[Double],
-      c.asInstanceOf[Double], d.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c, d) =>
-      s"graft.sql.GeomEval.cellNeighborhood($a, $b, $c, $d)")
-  override def prettyName: String = "cellNeighborhood"
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-      c: Expression, d: Expression): Expression = copy(a, b, c, d)
-}
-case class StCellX(child: Expression) extends GeomUnaryExpr {
-  def fname = "cellX"
-  override def dataType: DataType = LongType
-  protected def evalFn(v: Any) = GeomEval.cellX(v.asInstanceOf[Long])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StCellY(child: Expression) extends GeomUnaryExpr {
-  def fname = "cellY"
-  override def dataType: DataType = LongType
-  protected def evalFn(v: Any) = GeomEval.cellY(v.asInstanceOf[Long])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
+case class StCellNeighborhood(children: Args) extends GeomCall("cellNeighborhood", Longs)
+case class StCellX(children: Args) extends GeomCall("cellX", LongType)
+case class StCellY(children: Args) extends GeomCall("cellY", LongType)
 
 // ------------------------------------------------- vector-tile surface
 
 /** st_tileenvelope(z, x, y[, margin]) — XYZ tile rect in EPSG:3857
   * (PostGIS contract; see kernels/Mvt). Null for out-of-range z/x/y. */
-case class StTileEnvelope(first: Expression, second: Expression,
-    third: Expression, fourth: Expression)
-    extends QuaternaryExpression with ImplicitCastInputTypes with Serializable {
-  override def inputTypes: Seq[DataType] =
-    Seq(IntegerType, LongType, LongType, DoubleType)
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-    GeomEval.tileEnvelope(a.asInstanceOf[Int], b.asInstanceOf[Long],
-      c.asInstanceOf[Long], d.asInstanceOf[Double])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c, d) =>
-      s"""${ev.value} = graft.sql.GeomEval.tileEnvelope($a, $b, $c, $d);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
-  override def prettyName: String = "tileEnvelope"
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-      c: Expression, d: Expression): Expression = copy(a, b, c, d)
-}
-
+case class StTileEnvelope(children: Args) extends GeomCall("tileEnvelope", Geom)
 /** st_asmvtgeom(geom, z, x, y[, extent, buffer, clip]) — integer
   * tile-local MVT geometry (transform → snap → clip → snap → clean;
   * kernels/Mvt documents the deliberate snapped-grid clipping order).
-  * Hot map stage of tile generation — hand-codegen'd, never fallback. */
-case class StAsMvtGeom(children: Seq[Expression]) extends Expression with Serializable {
-  require(children.length == 7,
-    "st_asmvtgeom takes (geom, z, x, y, extent, buffer, clip)")
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) null
-    else GeomEval.asMvtGeom(vs(0).asInstanceOf[InternalRow],
-      vs(1).asInstanceOf[Int], vs(2).asInstanceOf[Long], vs(3).asInstanceOf[Long],
-      vs(4).asInstanceOf[Int], vs(5).asInstanceOf[Int], vs(6).asInstanceOf[Boolean])
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-    val gen = children.map(_.genCode(ctx))
-    val anyNull = gen.map(_.isNull).mkString(" || ")
-    val args = gen.map(_.value).mkString(", ")
-    val javaType = CodeGenerator.javaType(dataType)
-    val childCode = gen.map(_.code.toString).mkString("\n")
-    ev.copy(code = code"""
-       |$childCode
-       |boolean ${ev.isNull} = $anyNull;
-       |$javaType ${ev.value} = null;
-       |if (!${ev.isNull}) {
-       |  ${ev.value} = graft.sql.GeomEval.asMvtGeom($args);
-       |  ${ev.isNull} = ${ev.value} == null;
-       |}
-     """.stripMargin)
-  }
-  override def prettyName: String = "asMvtGeom"
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression = copy(newChildren)
-}
-
+  * Hot map stage of tile generation. */
+case class StAsMvtGeom(children: Args) extends GeomCall("asMvtGeom", Geom)
 /** st_squaregrid(geom, size) — array of (i, j) grid-cell indices
   * covering the envelope; null over the cell cap (typed, never OOM). */
-case class StSquareGrid(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "squareGrid"
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("i", LongType, nullable = false),
-    StructField("j", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.squareGrid(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
+case class StSquareGrid(children: Args) extends GeomCall("squareGrid", GridCells)
 /** st_squaregrid_cell(i, j, size) — the cell polygon. */
-case class StSquareGridCell(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr with ImplicitCastInputTypes {
-  def fname = "squareGridCell"
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType, DoubleType)
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.squareGridCell(a.asInstanceOf[Long], b.asInstanceOf[Long],
-      c.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-      c: Expression): Expression = copy(a, b, c)
-}
-
+case class StSquareGridCell(children: Args) extends GeomCall("squareGridCell", Geom)
 /** st_mvt_decode(tile) — (id, geom) features of the first layer;
   * null on malformed bytes. */
-case class StMvtDecode(child: Expression) extends GeomUnaryExpr {
-  def fname = "mvtDecode"
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("id", LongType, nullable = false),
-    StructField("geom", GeomExprs.geomType, nullable = false),
-    StructField("tags", MapType(StringType, StringType, valueContainsNull = false),
-      nullable = false))), containsNull = false)
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.mvtDecode(v.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
+case class StMvtDecode(children: Args) extends GeomCall("mvtDecode", MvtFeatures)
+case class StMvtLayerName(children: Args) extends GeomCall("mvtLayerName", StringType)
+case class StMvtExtent(children: Args) extends GeomCall("mvtExtent", IntegerType) {
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = nullSafeCall(ctx, ev) { args =>
+    val raw = ctx.freshName("mvtExt") // -1 = NULL (malformed bytes)
+    s"""int $raw = graft.sql.GeomEval.mvtExtentOrNeg(${args.head});
+       |${ev.isNull} = $raw < 0;
+       |${ev.value} = $raw;""".stripMargin
+  }
 }
-case class StMvtLayerName(child: Expression) extends GeomUnaryExpr {
-  def fname = "mvtLayerName"
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.mvtLayerName(v.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StMvtExtent(child: Expression) extends GeomUnaryExpr {
-  def fname = "mvtExtent"
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.mvtExtent(v.asInstanceOf[Array[Byte]])
-  // primitive result but nullable on malformed bytes: -1 sentinel
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val raw = ctx.freshName("mvtExt")
-      s"""
-         |int $raw = graft.sql.GeomEval.mvtExtentOrNeg($c);
-         |${ev.isNull} = $raw < 0;
-         |${ev.value} = $raw;
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
 /** st_geometricmedian(geom[, tol, max_iter]) — Weiszfeld/Vardi-Zhang
   * fixed point; points-only operand contract (PostGIS). */
-case class StGeometricMedian(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr with ImplicitCastInputTypes {
-  def fname = "geometricMedian"
-  override def inputTypes: Seq[DataType] =
-    Seq(GeomExprs.geomType, DoubleType, IntegerType)
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.geometricMedian(a.asInstanceOf[InternalRow],
-      b.asInstanceOf[Double], c.asInstanceOf[Int])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-      c: Expression): Expression = copy(a, b, c)
-}
-
+case class StGeometricMedian(children: Args) extends GeomCall("geometricMedian", Geom)
 /** st_generatepoints(geom, n[, seed]) — deterministic seeded uniform
   * points in a polygon (triangulate + area-weighted sampling, never a
   * rejection loop). */
-case class StGeneratePoints(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr with ImplicitCastInputTypes {
-  def fname = "generatePoints"
-  override def inputTypes: Seq[DataType] =
-    Seq(GeomExprs.geomType, IntegerType, LongType)
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.generatePoints(a.asInstanceOf[InternalRow],
-      b.asInstanceOf[Int], c.asInstanceOf[Long])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-      c: Expression): Expression = copy(a, b, c)
-}
-
+case class StGeneratePoints(children: Args) extends GeomCall("generatePoints", Geom)
 /** st_hexdistance(q1, r1, q2, r2) — axial hex-grid distance. */
-case class StHexDistance(first: Expression, second: Expression,
-    third: Expression, fourth: Expression)
-    extends QuaternaryExpression with ImplicitCastInputTypes with Serializable {
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType, LongType, LongType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-    GeomEval.hexDistance(a.asInstanceOf[Long], b.asInstanceOf[Long],
-      c.asInstanceOf[Long], d.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c, d) =>
-      s"graft.sql.GeomEval.hexDistance($a, $b, $c, $d)")
-  override def prettyName: String = "hexDistance"
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-      c: Expression, d: Expression): Expression = copy(a, b, c, d)
-}
-
+case class StHexDistance(children: Args) extends GeomCall("hexDistance", LongType)
 /** st_hexring(q, r, k) — cells at hex distance exactly k (H3 hexRing). */
-case class StHexRing(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr with ImplicitCastInputTypes {
-  def fname = "hexRing"
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType, IntegerType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("q", LongType, nullable = false),
-    StructField("r", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.hexRing(a.asInstanceOf[Long], b.asInstanceOf[Long], c.asInstanceOf[Int])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-      c: Expression): Expression = copy(a, b, c)
-}
-
+case class StHexRing(children: Args) extends GeomCall("hexRing", HexCells)
 /** st_quadkey(z, x, y) — Bing tile-system quadkey string. */
-case class StQuadkey(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr with ImplicitCastInputTypes {
-  def fname = "quadkey"
-  override def inputTypes: Seq[DataType] = Seq(IntegerType, LongType, LongType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.quadkey(a.asInstanceOf[Int], b.asInstanceOf[Long], c.asInstanceOf[Long])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-      c: Expression): Expression = copy(a, b, c)
-}
-
+case class StQuadkey(children: Args) extends GeomCall("quadkey", StringType)
 /** st_quadkey_decode(qk) — struct(z, x, y); null on malformed keys. */
-case class StQuadkeyDecode(child: Expression) extends GeomUnaryExpr {
-  def fname = "quadkeyDecode"
-  override def dataType: DataType = StructType(Seq(
-    StructField("z", IntegerType, nullable = false),
-    StructField("x", LongType, nullable = false),
-    StructField("y", LongType, nullable = false)))
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) =
-    GeomEval.quadkeyDecode(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
+case class StQuadkeyDecode(children: Args) extends GeomCall("quadkeyDecode", TileZxy)
 /** st_lineinterpolatepoints(line, fraction) — points at every multiple
   * of `fraction` (PostGIS repeat=true contract), as MULTIPOINT. */
-case class StLineInterpolatePoints(left: Expression, right: Expression)
-    extends GeomBinaryExpr {
-  def fname = "lineInterpolatePoints"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.lineInterpolatePoints(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
+case class StLineInterpolatePoints(children: Args) extends GeomCall("lineInterpolatePoints", Geom)

@@ -85,9 +85,9 @@ case class SpatialJoinRule(level: Int = 6) extends Rule[LogicalPlan] with Predic
   private def rewritePip(j: Join, left: LogicalPlan, right: LogicalPlan,
       hint: JoinHint, conjuncts: Seq[Expression]): Option[LogicalPlan] = {
     val hit = conjuncts.collectFirst {
-      case p @ StContainsXY(g, lon, lat) if sidesSplit(g, Seq(lon, lat), left, right) =>
+      case p @ StContainsXY(Seq(g, lon, lat)) if sidesSplit(g, Seq(lon, lat), left, right) =>
         (p, g, lon, lat)
-      case p @ StIntersectsXY(g, lon, lat) if sidesSplit(g, Seq(lon, lat), left, right) =>
+      case p @ StIntersectsXY(Seq(g, lon, lat)) if sidesSplit(g, Seq(lon, lat), left, right) =>
         (p, g, lon, lat)
     }
     hit.map { case (_, geomE, lonE, latE) =>
@@ -97,7 +97,7 @@ case class SpatialJoinRule(level: Int = 6) extends Rule[LogicalPlan] with Predic
 
       val cellAttrPt = AttributeReference("__graft_cell_pt", LongType, nullable = false)()
       var ptFields = ptSide.output :+
-        Alias(StCellId(Literal(level), lonE, latE), "__graft_cell_pt")(
+        Alias(StCellId(Seq(Literal(level), lonE, latE)), "__graft_cell_pt")(
           exprId = cellAttrPt.exprId)
       val saltPt = AttributeReference("__graft_salt_pt",
         org.apache.spark.sql.types.IntegerType, nullable = false)()
@@ -108,7 +108,7 @@ case class SpatialJoinRule(level: Int = 6) extends Rule[LogicalPlan] with Predic
 
       val cellAttrPoly = AttributeReference("__graft_cell_poly", LongType, nullable = false)()
       val gen = Generate(
-        Explode(StCovering(Literal(level), geomE)),
+        Explode(StCovering(Seq(Literal(level), geomE))),
         unrequiredChildIndex = Nil,
         outer = false,
         qualifier = None,
@@ -153,7 +153,7 @@ case class SpatialJoinRule(level: Int = 6) extends Rule[LogicalPlan] with Predic
       hint: JoinHint, conjuncts: Seq[Expression]): Option[LogicalPlan] = {
     def distPair(d: Expression): Option[(Expression, Expression, Expression, Expression)] =
       d match {
-        case StDistance(StPoint(ax, ay), StPoint(bx, by)) => Some((ax, ay, bx, by))
+        case StDistance(Seq(StPoint(Seq(ax, ay)), StPoint(Seq(bx, by)))) => Some((ax, ay, bx, by))
         case _ => None
       }
     def radiusOf(r: Expression): Option[Double] =
@@ -185,7 +185,7 @@ case class SpatialJoinRule(level: Int = 6) extends Rule[LogicalPlan] with Predic
 
       val cellA = AttributeReference("__graft_cell_a", LongType, nullable = false)()
       val aProj = Project(aSide.output :+
-        Alias(StCellId(Literal(lvl), ax, ay), "__graft_cell_a")(exprId = cellA.exprId), aSide)
+        Alias(StCellId(Seq(Literal(lvl), ax, ay)), "__graft_cell_a")(exprId = cellA.exprId), aSide)
 
       // b side explodes its <=9 neighbour cells, derived by INTEGER
       // index arithmetic from b's own cell (x±1 antimeridian-wrapped,
@@ -195,7 +195,7 @@ case class SpatialJoinRule(level: Int = 6) extends Rule[LogicalPlan] with Predic
       val cellsArr = AttributeReference("__graft_cells_b",
         ArrayType(LongType, containsNull = false), nullable = true)()
       val bProj = Project(bSide.output :+
-        Alias(StCellNeighborhood(Literal(lvl), bx, by, Literal(1)),
+        Alias(StCellNeighborhood(Seq(Literal(lvl), bx, by, Literal(1))),
           "__graft_cells_b")(exprId = cellsArr.exprId), bSide)
       val cellB = AttributeReference("__graft_cell_b", LongType, nullable = false)()
       val bGen = Generate(Explode(cellsArr), Nil, outer = false, None, Seq(cellB), bProj)
@@ -226,11 +226,11 @@ case class SpatialJoinRule(level: Int = 6) extends Rule[LogicalPlan] with Predic
   private def rewriteGeomPair(j: Join, left: LogicalPlan, right: LogicalPlan,
       hint: JoinHint, conjuncts: Seq[Expression]): Option[LogicalPlan] = {
     def geomPair(p: Expression): Option[(Expression, Expression)] = p match {
-      case StIntersects(a, b) => Some((a, b))
-      case StContains(a, b)   => Some((a, b))
-      case StWithin(a, b)     => Some((a, b))
-      case StCovers(a, b)     => Some((a, b))
-      case StCoveredBy(a, b)  => Some((a, b))
+      case StIntersects(Seq(a, b)) => Some((a, b))
+      case StContains(Seq(a, b))   => Some((a, b))
+      case StWithin(Seq(a, b))     => Some((a, b))
+      case StCovers(Seq(a, b))     => Some((a, b))
+      case StCoveredBy(Seq(a, b))  => Some((a, b))
       case _ => None
     }
     val hit = conjuncts.iterator.flatMap(geomPair).collectFirst {
@@ -245,7 +245,7 @@ case class SpatialJoinRule(level: Int = 6) extends Rule[LogicalPlan] with Predic
         val covAttr = AttributeReference(s"__graft_cov_$tag",
           ArrayType(LongType, containsNull = false), nullable = true)()
         val proj = Project(side.output :+
-          Alias(StCovering(Literal(level), g), s"__graft_cov_$tag")(exprId = covAttr.exprId), side)
+          Alias(StCovering(Seq(Literal(level), g)), s"__graft_cov_$tag")(exprId = covAttr.exprId), side)
         val cellAttr = AttributeReference(s"__graft_cell_$tag", LongType, nullable = false)()
         val gen = Generate(Explode(covAttr), Nil, outer = false, None, Seq(cellAttr), proj)
         (gen, covAttr, cellAttr)

@@ -1,146 +1,142 @@
 package graft.sql
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graft.ColumnBridge
 
 /**
  * Column API for the st_* operators plus SQL function registration
  * (SparkSessionExtensions.injectFunction analogue via the session
- * FunctionRegistry — SURVEY.md §2.6).
+ * FunctionRegistry — SURVEY.md §2.6). Both build from [[Catalogue]].
  */
 object functions {
 
   private def col(e: Expression): Column = ColumnBridge.column(e)
   private def x(c: Column): Expression = ColumnBridge.expression(c)
+  private def call(name: String, args: Column*): Column = col(Catalogue(name)(args.map(x)))
 
   // codecs
-  def st_geomfromtext(wkt: Column): Column = col(StGeomFromText(x(wkt)))
+  def st_geomfromtext(wkt: Column): Column = call("st_geomfromtext", wkt)
 
   /** EXPLICITLY LOSSY drop-to-2D parse of XYZ/XYM/XYZM WKT (PostGIS-
     * sourced corpora): the Z/M token and extra ordinates drop. The
     * default st_geomfromtext keeps the typed rejection contract. */
-  def st_geomfromtext_force2d(wkt: Column): Column = col(StGeomFromTextForce2D(x(wkt)))
-  def st_astext(g: Column): Column = col(StAsText(x(g)))
-  def st_geometrytype(g: Column): Column = col(StGeometryType(x(g)))
-  def st_point(lon: Column, lat: Column): Column = col(StPoint(x(lon), x(lat)))
+  def st_geomfromtext_force2d(wkt: Column): Column = call("st_geomfromtext_force2d", wkt)
+  def st_astext(g: Column): Column = call("st_astext", g)
+  def st_geometrytype(g: Column): Column = call("st_geometrytype", g)
+  def st_point(lon: Column, lat: Column): Column = call("st_point", lon, lat)
   /** PostGIS alias of [[st_point]]. */
   def st_makepoint(lon: Column, lat: Column): Column = st_point(lon, lat)
   def st_rect(xmin: Column, ymin: Column, xmax: Column, ymax: Column): Column =
-    col(StRect(x(xmin), x(ymin), x(xmax), x(ymax)))
+    call("st_rect", xmin, ymin, xmax, ymax)
   /** GEOMETRYCOLLECTION ↔ array<geom> (Spark-native collection form). */
-  def st_collection_fromtext(wkt: Column): Column = col(StCollectionFromText(x(wkt)))
-  def st_collection_astext(arr: Column): Column = col(StCollectionAsText(x(arr)))
+  def st_collection_fromtext(wkt: Column): Column = call("st_collection_fromtext", wkt)
+  def st_collection_astext(arr: Column): Column = call("st_collection_astext", arr)
   /** Unary union of an array<geom>: merged polygons, fully noded +
     * dissolved linework, residual points (empties omitted). */
-  def st_unary_union(arr: Column): Column = col(StUnaryUnion(x(arr)))
+  def st_unary_union(arr: Column): Column = call("st_unary_union", arr)
   /** JTS GeometryCollection centroid over array<geom> (highest
     * dimension wins). */
-  def st_collection_centroid(arr: Column): Column = col(StCollectionCentroid(x(arr)))
-  def st_numparts(g: Column): Column = col(StNumParts(x(g)))
+  def st_collection_centroid(arr: Column): Column = call("st_collection_centroid", arr)
+  def st_numparts(g: Column): Column = call("st_numparts", g)
   /** OGC Mod-2 boundary. */
-  def st_boundary(g: Column): Column = col(StBoundary(x(g)))
+  def st_boundary(g: Column): Column = call("st_boundary", g)
   /** Minimum clearance distance / realizing line. */
-  def st_minclearance(g: Column): Column = col(StMinClearance(x(g)))
-  def st_minclearanceline(g: Column): Column = col(StMinClearanceLine(x(g)))
+  def st_minclearance(g: Column): Column = call("st_minclearance", g)
+  def st_minclearanceline(g: Column): Column = call("st_minclearanceline", g)
   /** Polygonize linework: array<geom> → array of formed polygons. */
-  def st_polygonize(arr: Column): Column = col(StPolygonize(x(arr)))
+  def st_polygonize(arr: Column): Column = call("st_polygonize", arr)
   /** Winnowing (MOSS) rolling-hash fingerprints of a text column. */
-  def st_winnow(text: Column, k: Column, w: Column): Column =
-    col(StWinnowFingerprints(x(text), x(k), x(w)))
+  def st_winnow(text: Column, k: Column, w: Column): Column = call("st_winnow", text, k, w)
 
   // measures
-  def st_area(g: Column): Column = col(StArea(x(g)))
-  def st_unsigned_area(g: Column): Column = col(StUnsignedArea(x(g)))
-  def st_sphere_area(g: Column): Column = col(StSphereArea(x(g)))
-  def st_geodesic_area(g: Column): Column = col(StGeodesicArea(x(g)))
-  def st_geodesic_area_unsigned(g: Column): Column = col(StGeodesicAreaUnsigned(x(g)))
-  def st_length(g: Column): Column = col(StLength(x(g)))
-  def st_length_sphere(g: Column): Column = col(StLengthSphere(x(g)))
-  def st_length_rhumb(g: Column): Column = col(StLengthRhumb(x(g)))
-  def st_length_geodesic(g: Column): Column = col(StLengthGeodesic(x(g)))
-  def st_perimeter(g: Column): Column = col(StPerimeter(x(g)))
-  def st_numpoints(g: Column): Column = col(StNumPoints(x(g)))
+  def st_area(g: Column): Column = call("st_area", g)
+  def st_unsigned_area(g: Column): Column = call("st_unsigned_area", g)
+  def st_sphere_area(g: Column): Column = call("st_sphere_area", g)
+  def st_geodesic_area(g: Column): Column = call("st_geodesic_area", g)
+  def st_geodesic_area_unsigned(g: Column): Column = call("st_geodesic_area_unsigned", g)
+  def st_length(g: Column): Column = call("st_length", g)
+  def st_length_sphere(g: Column): Column = call("st_length_sphere", g)
+  def st_length_rhumb(g: Column): Column = call("st_length_rhumb", g)
+  def st_length_geodesic(g: Column): Column = call("st_length_geodesic", g)
+  def st_perimeter(g: Column): Column = call("st_perimeter", g)
+  def st_numpoints(g: Column): Column = call("st_numpoints", g)
   /** PostGIS alias of [[st_numpoints]]. */
   def st_npoints(g: Column): Column = st_numpoints(g)
-  def st_isempty(g: Column): Column = col(StIsEmpty(x(g)))
-  def st_isccw(g: Column): Column = col(StIsCcw(x(g)))
-  def st_isconvex(g: Column): Column = col(StIsConvex(x(g)))
-  def st_windingorder(g: Column): Column = col(StWindingOrder(x(g)))
-  def st_xmin(g: Column): Column = col(StXMin(x(g)))
-  def st_ymin(g: Column): Column = col(StYMin(x(g)))
-  def st_xmax(g: Column): Column = col(StXMax(x(g)))
-  def st_ymax(g: Column): Column = col(StYMax(x(g)))
-  def st_x(g: Column): Column = col(StX(x(g)))
-  def st_y(g: Column): Column = col(StY(x(g)))
-  def st_extremes(g: Column): Column = col(StExtremes(x(g)))
+  def st_isempty(g: Column): Column = call("st_isempty", g)
+  def st_isccw(g: Column): Column = call("st_isccw", g)
+  def st_isconvex(g: Column): Column = call("st_isconvex", g)
+  def st_windingorder(g: Column): Column = call("st_windingorder", g)
+  def st_xmin(g: Column): Column = call("st_xmin", g)
+  def st_ymin(g: Column): Column = call("st_ymin", g)
+  def st_xmax(g: Column): Column = call("st_xmax", g)
+  def st_ymax(g: Column): Column = call("st_ymax", g)
+  def st_x(g: Column): Column = call("st_x", g)
+  def st_y(g: Column): Column = call("st_y", g)
+  def st_extremes(g: Column): Column = call("st_extremes", g)
 
   // derived geometries
-  def st_centroid(g: Column): Column = col(StCentroid(x(g)))
-  def st_envelope(g: Column): Column = col(StEnvelope(x(g)))
-  def st_interiorpoint(g: Column): Column = col(StInteriorPoint(x(g)))
-  def st_convexhull(g: Column): Column = col(StConvexHull(x(g)))
+  def st_centroid(g: Column): Column = call("st_centroid", g)
+  def st_envelope(g: Column): Column = call("st_envelope", g)
+  def st_interiorpoint(g: Column): Column = call("st_interiorpoint", g)
+  def st_convexhull(g: Column): Column = call("st_convexhull", g)
   def st_grahamhull(g: Column, includeOnHull: Column): Column =
-    col(StGrahamHull(x(g), x(includeOnHull)))
-  def st_subdivide(g: Column, maxVerts: Column): Column = col(StSubdivide(x(g), x(maxVerts)))
-  def st_linemerge(g: Column): Column = col(StLineMerge(x(g)))
-  def st_offsetcurve(g: Column, dist: Column): Column = col(StOffsetCurve(x(g), x(dist)))
-  def st_makevalid(g: Column): Column = col(StMakeValid(x(g)))
-  def st_shortestline(a: Column, b: Column): Column = col(StShortestLine(x(a), x(b)))
-  def st_snap(a: Column, b: Column, tol: Column): Column = col(StSnap(x(a), x(b), x(tol)))
-  def st_split(a: Column, b: Column): Column = col(StSplit(x(a), x(b)))
+    call("st_grahamhull", g, includeOnHull)
+  def st_subdivide(g: Column, maxVerts: Column): Column = call("st_subdivide", g, maxVerts)
+  def st_linemerge(g: Column): Column = call("st_linemerge", g)
+  def st_offsetcurve(g: Column, dist: Column): Column = call("st_offsetcurve", g, dist)
+  def st_makevalid(g: Column): Column = call("st_makevalid", g)
+  def st_shortestline(a: Column, b: Column): Column = call("st_shortestline", a, b)
+  def st_snap(a: Column, b: Column, tol: Column): Column = call("st_snap", a, b, tol)
+  def st_split(a: Column, b: Column): Column = call("st_split", a, b)
   def st_linesubstring(g: Column, t0: Column, t1: Column): Column =
-    col(StLineSubstring(x(g), x(t0), x(t1)))
-  def st_reverse(g: Column): Column = col(StReverse(x(g)))
-  def st_normalize(g: Column): Column = col(StNormalize(x(g)))
-  def st_exteriorring(g: Column): Column = col(StExteriorRing(x(g)))
-  def st_numinteriorrings(g: Column): Column = col(StNumInteriorRings(x(g)))
-  def st_interiorringn(g: Column, n: Column): Column = col(StInteriorRingN(x(g), x(n)))
-  def st_pointn(g: Column, n: Column): Column = col(StPointN(x(g), x(n)))
-  def st_startpoint(g: Column): Column = col(StStartPoint(x(g)))
-  def st_endpoint(g: Column): Column = col(StEndPoint(x(g)))
-  def st_geometryn(g: Column, n: Column): Column = col(StGeometryN(x(g), x(n)))
-  def st_dumprings(g: Column): Column = col(StDumpRings(x(g)))
-  def st_maxdistance(a: Column, b: Column): Column = col(StMaxDistance(x(a), x(b)))
-  def st_longestline(a: Column, b: Column): Column = col(StLongestLine(x(a), x(b)))
-  def st_makeline(arr: Column): Column = col(StMakeLine(x(arr)))
-  def st_flipcoordinates(g: Column): Column = col(StFlipCoordinates(x(g)))
-  def st_isclosed(g: Column): Column = col(StIsClosed(x(g)))
-  def st_issimple(g: Column): Column = col(StIsSimple(x(g)))
-  def st_isring(g: Column): Column = col(StIsRing(x(g)))
-  def st_multi(g: Column): Column = col(StMulti(x(g)))
-  def st_points(g: Column): Column = col(StPoints(x(g)))
-  def st_boundingdiagonal(g: Column): Column = col(StBoundingDiagonal(x(g)))
-  def st_scroll(g: Column, p: Column): Column = col(StScroll(x(g), x(p)))
-  def st_shift_longitude(g: Column): Column = col(StShiftLongitude(x(g)))
-  def st_minimumboundingcircle(g: Column): Column =
-    col(StMinimumBoundingCircle(x(g), Literal(48)))
+    call("st_linesubstring", g, t0, t1)
+  def st_reverse(g: Column): Column = call("st_reverse", g)
+  def st_normalize(g: Column): Column = call("st_normalize", g)
+  def st_exteriorring(g: Column): Column = call("st_exteriorring", g)
+  def st_numinteriorrings(g: Column): Column = call("st_numinteriorrings", g)
+  def st_interiorringn(g: Column, n: Column): Column = call("st_interiorringn", g, n)
+  def st_pointn(g: Column, n: Column): Column = call("st_pointn", g, n)
+  def st_startpoint(g: Column): Column = call("st_startpoint", g)
+  def st_endpoint(g: Column): Column = call("st_endpoint", g)
+  def st_geometryn(g: Column, n: Column): Column = call("st_geometryn", g, n)
+  def st_dumprings(g: Column): Column = call("st_dumprings", g)
+  def st_maxdistance(a: Column, b: Column): Column = call("st_maxdistance", a, b)
+  def st_longestline(a: Column, b: Column): Column = call("st_longestline", a, b)
+  def st_makeline(arr: Column): Column = call("st_makeline", arr)
+  def st_flipcoordinates(g: Column): Column = call("st_flipcoordinates", g)
+  def st_isclosed(g: Column): Column = call("st_isclosed", g)
+  def st_issimple(g: Column): Column = call("st_issimple", g)
+  def st_isring(g: Column): Column = call("st_isring", g)
+  def st_multi(g: Column): Column = call("st_multi", g)
+  def st_points(g: Column): Column = call("st_points", g)
+  def st_boundingdiagonal(g: Column): Column = call("st_boundingdiagonal", g)
+  def st_scroll(g: Column, p: Column): Column = call("st_scroll", g, p)
+  def st_shift_longitude(g: Column): Column = call("st_shift_longitude", g)
+  def st_minimumboundingcircle(g: Column): Column = call("st_minimumboundingcircle", g)
   def st_minimumboundingcircle(g: Column, segs: Column): Column =
-    col(StMinimumBoundingCircle(x(g), x(segs)))
-  def st_minimumboundingradius(g: Column): Column = col(StMinimumBoundingRadius(x(g)))
-  def st_sharedpaths(a: Column, b: Column): Column = col(StSharedPaths(x(a), x(b)))
+    call("st_minimumboundingcircle", g, segs)
+  def st_minimumboundingradius(g: Column): Column = call("st_minimumboundingradius", g)
+  def st_sharedpaths(a: Column, b: Column): Column = call("st_sharedpaths", a, b)
   def st_linecrossingdirection(a: Column, b: Column): Column =
-    col(StLineCrossingDirection(x(a), x(b)))
-  def st_hexbin(xc: Column, yc: Column, size: Column): Column =
-    col(StHexBin(x(xc), x(yc), x(size)))
+    call("st_linecrossingdirection", a, b)
+  def st_hexbin(xc: Column, yc: Column, size: Column): Column = call("st_hexbin", xc, yc, size)
   def st_hexbin_center(q: Column, r: Column, size: Column): Column =
-    col(StHexBinCenter(x(q), x(r), x(size)))
-  def st_hexagon(q: Column, r: Column, size: Column): Column =
-    col(StHexagon(x(q), x(r), x(size)))
+    call("st_hexbin_center", q, r, size)
+  def st_hexagon(q: Column, r: Column, size: Column): Column = call("st_hexagon", q, r, size)
   def st_tileenvelope(z: Column, xt: Column, yt: Column): Column =
-    col(StTileEnvelope(x(z), x(xt), x(yt), Literal(0.0)))
+    call("st_tileenvelope", z, xt, yt)
   def st_tileenvelope(z: Column, xt: Column, yt: Column, margin: Column): Column =
-    col(StTileEnvelope(x(z), x(xt), x(yt), x(margin)))
+    call("st_tileenvelope", z, xt, yt, margin)
   def st_asmvtgeom(g: Column, z: Column, xt: Column, yt: Column): Column =
-    col(StAsMvtGeom(Seq(x(g), x(z), x(xt), x(yt),
-      Literal(4096), Literal(256), Literal(true))))
+    call("st_asmvtgeom", g, z, xt, yt)
   def st_asmvtgeom(g: Column, z: Column, xt: Column, yt: Column,
       extent: Column, buffer: Column, clip: Column): Column =
-    col(StAsMvtGeom(Seq(x(g), x(z), x(xt), x(yt), x(extent), x(buffer), x(clip))))
-  def st_squaregrid(g: Column, size: Column): Column =
-    col(StSquareGrid(x(g), x(size)))
+    call("st_asmvtgeom", g, z, xt, yt, extent, buffer, clip)
+  def st_squaregrid(g: Column, size: Column): Column = call("st_squaregrid", g, size)
   def st_squaregrid_cell(i: Column, j: Column, size: Column): Column =
-    col(StSquareGridCell(x(i), x(j), x(size)))
+    call("st_squaregrid_cell", i, j, size)
   def st_asmvt(g: Column, id: Column): Column =
     col(StAsMvtAgg(x(g), x(id)).toAggregateExpression())
   def st_asmvt(g: Column, id: Column, layer: String, extent: Int): Column =
@@ -150,179 +146,161 @@ object functions {
   def st_asmvt(g: Column, id: Column, attrs: Column,
       layer: String, extent: Int): Column =
     col(StAsMvtAgg(x(g), x(id), Some(x(attrs)), layer, extent).toAggregateExpression())
-  def st_mvt_decode(tile: Column): Column = col(StMvtDecode(x(tile)))
-  def st_mvt_layername(tile: Column): Column = col(StMvtLayerName(x(tile)))
-  def st_mvt_extent(tile: Column): Column = col(StMvtExtent(x(tile)))
-  def st_geometricmedian(g: Column): Column =
-    col(StGeometricMedian(x(g), Literal(0.0), Literal(10000)))
+  def st_mvt_decode(tile: Column): Column = call("st_mvt_decode", tile)
+  def st_mvt_layername(tile: Column): Column = call("st_mvt_layername", tile)
+  def st_mvt_extent(tile: Column): Column = call("st_mvt_extent", tile)
+  def st_geometricmedian(g: Column): Column = call("st_geometricmedian", g)
   def st_geometricmedian(g: Column, tol: Column, maxIter: Column): Column =
-    col(StGeometricMedian(x(g), x(tol), x(maxIter)))
-  def st_generatepoints(g: Column, n: Column): Column =
-    col(StGeneratePoints(x(g), x(n), Literal(0L)))
+    call("st_geometricmedian", g, tol, maxIter)
+  def st_generatepoints(g: Column, n: Column): Column = call("st_generatepoints", g, n)
   def st_generatepoints(g: Column, n: Column, seed: Column): Column =
-    col(StGeneratePoints(x(g), x(n), x(seed)))
+    call("st_generatepoints", g, n, seed)
   def st_hexdistance(q1: Column, r1: Column, q2: Column, r2: Column): Column =
-    col(StHexDistance(x(q1), x(r1), x(q2), x(r2)))
-  def st_hexring(q: Column, r: Column, k: Column): Column =
-    col(StHexRing(x(q), x(r), x(k)))
-  def st_quadkey(z: Column, xt: Column, yt: Column): Column =
-    col(StQuadkey(x(z), x(xt), x(yt)))
-  def st_quadkey_decode(qk: Column): Column = col(StQuadkeyDecode(x(qk)))
+    call("st_hexdistance", q1, r1, q2, r2)
+  def st_hexring(q: Column, r: Column, k: Column): Column = call("st_hexring", q, r, k)
+  def st_quadkey(z: Column, xt: Column, yt: Column): Column = call("st_quadkey", z, xt, yt)
+  def st_quadkey_decode(qk: Column): Column = call("st_quadkey_decode", qk)
   def st_lineinterpolatepoints(line: Column, fraction: Column): Column =
-    col(StLineInterpolatePoints(x(line), x(fraction)))
-  def st_addpoint(line: Column, p: Column, pos: Column): Column =
-    col(StAddPoint(x(line), x(p), x(pos)))
-  def st_setpoint(line: Column, pos: Column, p: Column): Column =
-    col(StSetPoint(x(line), x(pos), x(p)))
-  def st_removepoint(line: Column, pos: Column): Column =
-    col(StRemovePoint(x(line), x(pos)))
-  def st_angle(a: Column, b: Column, c: Column): Column = col(StAngle(x(a), x(b), x(c)))
-  def st_expand(g: Column, d: Column): Column = col(StExpand(x(g), x(d)))
-  def st_node(g: Column): Column = col(StNode(x(g)))
+    call("st_lineinterpolatepoints", line, fraction)
+  def st_addpoint(line: Column, p: Column, pos: Column): Column = call("st_addpoint", line, p, pos)
+  def st_setpoint(line: Column, pos: Column, p: Column): Column = call("st_setpoint", line, pos, p)
+  def st_removepoint(line: Column, pos: Column): Column = call("st_removepoint", line, pos)
+  def st_angle(a: Column, b: Column, c: Column): Column = call("st_angle", a, b, c)
+  def st_expand(g: Column, d: Column): Column = call("st_expand", g, d)
+  def st_node(g: Column): Column = call("st_node", g)
   def st_maximuminscribedcircle(g: Column, tol: Column): Column =
-    col(StMaximumInscribedCircle(x(g), x(tol)))
-  def st_largestemptycircle(g: Column, tol: Column): Column =
-    col(StLargestEmptyCircle(x(g), x(tol)))
-  def st_voronoi(g: Column): Column = col(StVoronoi(x(g)))
+    call("st_maximuminscribedcircle", g, tol)
+  def st_largestemptycircle(g: Column, tol: Column): Column = call("st_largestemptycircle", g, tol)
+  def st_voronoi(g: Column): Column = call("st_voronoi", g)
   def st_voronoi(g: Column, minX: Column, minY: Column, maxX: Column, maxY: Column): Column =
-    col(StVoronoiClip(Seq(x(g), x(minX), x(minY), x(maxX), x(maxY))))
-  def st_buffer(g: Column, dist: Column): Column = col(StBuffer(x(g), x(dist)))
-  def st_buffer(g: Column, dist: Column, style: Column): Column =
-    col(StBufferStyle(x(g), x(dist), x(style)))
-  def st_simplify(g: Column, eps: Column): Column = col(StSimplify(x(g), x(eps)))
-  def st_simplifyvw(g: Column, eps: Column): Column = col(StSimplifyVw(x(g), x(eps)))
-  def st_simplify_idx(g: Column, eps: Column): Column = col(StSimplifyIdx(x(g), x(eps)))
-  def st_simplifyvw_idx(g: Column, eps: Column): Column = col(StSimplifyVwIdx(x(g), x(eps)))
-  def st_densify(g: Column, maxLen: Column): Column = col(StDensify(x(g), x(maxLen)))
-  def st_densify_rhumb(g: Column, maxLen: Column): Column =
-    col(StDensifyRhumb(x(g), x(maxLen)))
+    call("st_voronoi", g, minX, minY, maxX, maxY)
+  def st_buffer(g: Column, dist: Column): Column = call("st_buffer", g, dist)
+  def st_buffer(g: Column, dist: Column, style: Column): Column = call("st_buffer", g, dist, style)
+  def st_simplify(g: Column, eps: Column): Column = call("st_simplify", g, eps)
+  def st_simplifyvw(g: Column, eps: Column): Column = call("st_simplifyvw", g, eps)
+  def st_simplify_idx(g: Column, eps: Column): Column = call("st_simplify_idx", g, eps)
+  def st_simplifyvw_idx(g: Column, eps: Column): Column = call("st_simplifyvw_idx", g, eps)
+  def st_densify(g: Column, maxLen: Column): Column = call("st_densify", g, maxLen)
+  def st_densify_rhumb(g: Column, maxLen: Column): Column = call("st_densify_rhumb", g, maxLen)
   def st_densify_geodesic(g: Column, maxLen: Column): Column =
-    col(StDensifyGeodesic(x(g), x(maxLen)))
+    call("st_densify_geodesic", g, maxLen)
   def st_densify_haversine(g: Column, maxLen: Column): Column =
-    col(StDensifyHaversine(x(g), x(maxLen)))
-  def st_chaikin(g: Column, n: Column): Column = col(StChaikin(x(g), x(n)))
-  def st_removerepeated(g: Column): Column = col(StRemoveRepeated(x(g)))
-  def st_toradians(g: Column): Column = col(StToRadians(x(g)))
-  def st_todegrees(g: Column): Column = col(StToDegrees(x(g)))
-  def st_force_cw(g: Column): Column = col(StForceCw(x(g)))
-  def st_force_ccw(g: Column): Column = col(StForceCcw(x(g)))
-  def st_dumppoints(g: Column): Column = col(StDumpPoints(x(g)))
-  def st_dumpsegments(g: Column): Column = col(StDumpSegments(x(g)))
-  def st_lineintersection(a: Column, b: Column): Column = col(StLineIntersection(x(a), x(b)))
-  def st_closestpoint(g: Column, p: Column): Column = col(StClosestPoint(x(g), x(p)))
+    call("st_densify_haversine", g, maxLen)
+  def st_chaikin(g: Column, n: Column): Column = call("st_chaikin", g, n)
+  def st_removerepeated(g: Column): Column = call("st_removerepeated", g)
+  def st_toradians(g: Column): Column = call("st_toradians", g)
+  def st_todegrees(g: Column): Column = call("st_todegrees", g)
+  def st_force_cw(g: Column): Column = call("st_force_cw", g)
+  def st_force_ccw(g: Column): Column = call("st_force_ccw", g)
+  def st_dumppoints(g: Column): Column = call("st_dumppoints", g)
+  def st_dumpsegments(g: Column): Column = call("st_dumpsegments", g)
+  def st_lineintersection(a: Column, b: Column): Column = call("st_lineintersection", a, b)
+  def st_closestpoint(g: Column, p: Column): Column = call("st_closestpoint", g, p)
 
   // transforms
   def st_affine(g: Column, a: Column, b: Column, xoff: Column,
       d: Column, e: Column, yoff: Column): Column =
-    col(StAffine(Seq(x(g), x(a), x(b), x(xoff), x(d), x(e), x(yoff))))
-  def st_translate(g: Column, tx: Column, ty: Column): Column =
-    col(StTranslate(x(g), x(tx), x(ty)))
-  def st_rotate(g: Column, degrees: Column): Column = col(StRotate(x(g), x(degrees)))
-  def st_scale(g: Column, sx: Column, sy: Column): Column = col(StScale(x(g), x(sx), x(sy)))
-  def st_skew(g: Column, degX: Column, degY: Column): Column = col(StSkew(x(g), x(degX), x(degY)))
+    call("st_affine", g, a, b, xoff, d, e, yoff)
+  def st_translate(g: Column, tx: Column, ty: Column): Column = call("st_translate", g, tx, ty)
+  def st_rotate(g: Column, degrees: Column): Column = call("st_rotate", g, degrees)
+  def st_scale(g: Column, sx: Column, sy: Column): Column = call("st_scale", g, sx, sy)
+  def st_skew(g: Column, degX: Column, degY: Column): Column = call("st_skew", g, degX, degY)
 
   // predicates
-  def st_contains(a: Column, b: Column): Column = col(StContains(x(a), x(b)))
-  def st_within(a: Column, b: Column): Column = col(StWithin(x(a), x(b)))
-  def st_intersects(a: Column, b: Column): Column = col(StIntersects(x(a), x(b)))
-  def st_disjoint(a: Column, b: Column): Column = col(StDisjoint(x(a), x(b)))
+  def st_contains(a: Column, b: Column): Column = call("st_contains", a, b)
+  def st_within(a: Column, b: Column): Column = call("st_within", a, b)
+  def st_intersects(a: Column, b: Column): Column = call("st_intersects", a, b)
+  def st_disjoint(a: Column, b: Column): Column = call("st_disjoint", a, b)
   def st_contains_xy(poly: Column, lon: Column, lat: Column): Column =
-    col(StContainsXY(x(poly), x(lon), x(lat)))
+    call("st_contains_xy", poly, lon, lat)
   def st_intersects_xy(g: Column, lon: Column, lat: Column): Column =
-    col(StIntersectsXY(x(g), x(lon), x(lat)))
+    call("st_intersects_xy", g, lon, lat)
 
   // distances / navigation
-  def st_distance(a: Column, b: Column): Column = col(StDistance(x(a), x(b)))
-  def st_distance_sphere(a: Column, b: Column): Column = col(StDistanceSphere(x(a), x(b)))
-  def st_distance_rhumb(a: Column, b: Column): Column = col(StDistanceRhumb(x(a), x(b)))
-  def st_distance_geodesic(a: Column, b: Column): Column = col(StDistanceGeodesic(x(a), x(b)))
-  def st_azimuth(a: Column, b: Column): Column = col(StAzimuth(x(a), x(b)))
-  def st_bearing(a: Column, b: Column): Column = col(StBearing(x(a), x(b)))
-  def st_bearing_rhumb(a: Column, b: Column): Column = col(StBearingRhumb(x(a), x(b)))
-  def st_bearing_geodesic(a: Column, b: Column): Column = col(StBearingGeodesic(x(a), x(b)))
+  def st_distance(a: Column, b: Column): Column = call("st_distance", a, b)
+  def st_distance_sphere(a: Column, b: Column): Column = call("st_distance_sphere", a, b)
+  def st_distance_rhumb(a: Column, b: Column): Column = call("st_distance_rhumb", a, b)
+  def st_distance_geodesic(a: Column, b: Column): Column = call("st_distance_geodesic", a, b)
+  def st_azimuth(a: Column, b: Column): Column = call("st_azimuth", a, b)
+  def st_bearing(a: Column, b: Column): Column = call("st_bearing", a, b)
+  def st_bearing_rhumb(a: Column, b: Column): Column = call("st_bearing_rhumb", a, b)
+  def st_bearing_geodesic(a: Column, b: Column): Column = call("st_bearing_geodesic", a, b)
   def st_project(p: Column, bearing: Column, meters: Column): Column =
-    col(StProject(x(p), x(bearing), x(meters)))
+    call("st_project", p, bearing, meters)
   def st_project_rhumb(p: Column, bearing: Column, meters: Column): Column =
-    col(StProjectRhumb(x(p), x(bearing), x(meters)))
+    call("st_project_rhumb", p, bearing, meters)
   def st_project_geodesic(p: Column, bearing: Column, meters: Column): Column =
-    col(StProjectGeodesic(x(p), x(bearing), x(meters)))
-  def st_crosstrack(p: Column, a: Column, b: Column): Column =
-    col(StCrossTrack(x(p), x(a), x(b)))
-  def st_hausdorff(a: Column, b: Column): Column = col(StHausdorff(x(a), x(b)))
-  def st_frechet(a: Column, b: Column): Column = col(StFrechet(x(a), x(b)))
-  def st_linelocatepoint(line: Column, p: Column): Column =
-    col(StLineLocatePoint(x(line), x(p)))
+    call("st_project_geodesic", p, bearing, meters)
+  def st_crosstrack(p: Column, a: Column, b: Column): Column = call("st_crosstrack", p, a, b)
+  def st_hausdorff(a: Column, b: Column): Column = call("st_hausdorff", a, b)
+  def st_frechet(a: Column, b: Column): Column = call("st_frechet", a, b)
+  def st_linelocatepoint(line: Column, p: Column): Column = call("st_linelocatepoint", line, p)
   def st_lineinterpolatepoint(line: Column, fraction: Column): Column =
-    col(StLineInterpolatePoint(x(line), x(fraction)))
+    call("st_lineinterpolatepoint", line, fraction)
   def st_lineinterpolate_sphere(a: Column, b: Column, ratio: Column): Column =
-    col(StLineInterpolateSphere(x(a), x(b), x(ratio)))
+    call("st_lineinterpolate_sphere", a, b, ratio)
   def st_lineinterpolate_rhumb(a: Column, b: Column, ratio: Column): Column =
-    col(StLineInterpolateRhumb(x(a), x(b), x(ratio)))
+    call("st_lineinterpolate_rhumb", a, b, ratio)
   def st_lineinterpolate_geodesic(a: Column, b: Column, ratio: Column): Column =
-    col(StLineInterpolateGeodesic(x(a), x(b), x(ratio)))
+    call("st_lineinterpolate_geodesic", a, b, ratio)
 
   // wkb / validation / vwp
-  def st_asgeojson(g: Column): Column = col(StAsGeoJson(x(g)))
-  def st_geomfromgeojson(s: Column): Column = col(StGeomFromGeoJson(x(s)))
-  def st_geomfromwkb(b: Column): Column = col(StGeomFromWkb(x(b)))
+  def st_asgeojson(g: Column): Column = call("st_asgeojson", g)
+  def st_geomfromgeojson(s: Column): Column = call("st_geomfromgeojson", s)
+  def st_geomfromwkb(b: Column): Column = call("st_geomfromwkb", b)
 
   /** EXPLICITLY LOSSY drop-to-2D parse of Z/M-bearing (E)WKB. */
-  def st_geomfromwkb_force2d(b: Column): Column = col(StGeomFromWkbForce2D(x(b)))
-  def st_aswkb(g: Column): Column = col(StAsWkb(x(g)))
+  def st_geomfromwkb_force2d(b: Column): Column = call("st_geomfromwkb_force2d", b)
+  def st_aswkb(g: Column): Column = call("st_aswkb", g)
   /** EWKB interop: the reader accepts both plain WKB and SRID-tagged
     * EWKB, so st_geomfromewkb is the same decoder under the PostGIS
     * name; st_asewkb tags with an SRID; st_srid extracts it (0 when
     * untagged). */
-  def st_geomfromewkb(b: Column): Column = col(StGeomFromWkb(x(b)))
-  def st_asewkb(g: Column, srid: Column): Column = col(StAsEwkb(x(g), x(srid)))
-  def st_srid(b: Column): Column = col(StSrid(x(b)))
-  def st_isvalid(g: Column): Column = col(StIsValid(x(g)))
-  def st_isvalidreason(g: Column): Column = col(StIsValidReason(x(g)))
+  def st_geomfromewkb(b: Column): Column = call("st_geomfromewkb", b)
+  def st_asewkb(g: Column, srid: Column): Column = call("st_asewkb", g, srid)
+  def st_srid(b: Column): Column = call("st_srid", b)
+  def st_isvalid(g: Column): Column = call("st_isvalid", g)
+  def st_isvalidreason(g: Column): Column = call("st_isvalidreason", g)
   def st_simplifyvw_preserve(g: Column, eps: Column): Column =
-    col(StSimplifyVwPreserve(x(g), x(eps)))
+    call("st_simplifyvw_preserve", g, eps)
 
   // overlay (boolean ops)
-  def st_intersection(a: Column, b: Column): Column = col(StIntersection(x(a), x(b)))
-  def st_union(a: Column, b: Column): Column = col(StUnion(x(a), x(b)))
-  def st_difference(a: Column, b: Column): Column = col(StDifference(x(a), x(b)))
-  def st_symdifference(a: Column, b: Column): Column = col(StSymDifference(x(a), x(b)))
+  def st_intersection(a: Column, b: Column): Column = call("st_intersection", a, b)
+  def st_union(a: Column, b: Column): Column = call("st_union", a, b)
+  def st_difference(a: Column, b: Column): Column = call("st_difference", a, b)
+  def st_symdifference(a: Column, b: Column): Column = call("st_symdifference", a, b)
   // Heterogeneous (any dimension mix) boolean ops — result is the
   // array<geom> collection form [polygonal?, linework?, points?]
-  def st_intersection_hetero(a: Column, b: Column): Column =
-    col(StOverlayHetero(x(a), x(b), graft.kernels.Overlay.OpIntersection))
-  def st_union_hetero(a: Column, b: Column): Column =
-    col(StOverlayHetero(x(a), x(b), graft.kernels.Overlay.OpUnion))
-  def st_difference_hetero(a: Column, b: Column): Column =
-    col(StOverlayHetero(x(a), x(b), graft.kernels.Overlay.OpDifference))
-  def st_symdifference_hetero(a: Column, b: Column): Column =
-    col(StOverlayHetero(x(a), x(b), graft.kernels.Overlay.OpXor))
+  def st_intersection_hetero(a: Column, b: Column): Column = call("st_intersection_hetero", a, b)
+  def st_union_hetero(a: Column, b: Column): Column = call("st_union_hetero", a, b)
+  def st_difference_hetero(a: Column, b: Column): Column = call("st_difference_hetero", a, b)
+  def st_symdifference_hetero(a: Column, b: Column): Column = call("st_symdifference_hetero", a, b)
   def st_clip(poly: Column, line: Column, invert: Column): Column =
-    col(StClip(x(poly), x(line), x(invert)))
+    call("st_clip", poly, line, invert)
   /** CRS reprojection between EPSG codes (4326, 3857, 28992, UTM). */
   def st_transform(g: Column, fromSrid: Column, toSrid: Column): Column =
-    col(StTransform(x(g), x(fromSrid), x(toSrid)))
+    call("st_transform", g, fromSrid, toSrid)
 
   // fixed-precision (snap-rounded) overlay: every coordinate of the
   // result lies on the round(v*scale)/scale grid; rings that collapse
   // on the grid surface as 1-D linework via the `_lines` variants
-  def st_snap_to_grid(g: Column, scale: Column): Column =
-    col(StSnapToGrid(x(g), x(scale)))
+  def st_snap_to_grid(g: Column, scale: Column): Column = call("st_snap_to_grid", g, scale)
   def st_intersection_sr(a: Column, b: Column, scale: Column): Column =
-    col(StBooleanSr(x(a), x(b), x(scale), graft.kernels.Overlay.OpIntersection, linework = false))
+    call("st_intersection_sr", a, b, scale)
   def st_union_sr(a: Column, b: Column, scale: Column): Column =
-    col(StBooleanSr(x(a), x(b), x(scale), graft.kernels.Overlay.OpUnion, linework = false))
+    call("st_union_sr", a, b, scale)
   def st_difference_sr(a: Column, b: Column, scale: Column): Column =
-    col(StBooleanSr(x(a), x(b), x(scale), graft.kernels.Overlay.OpDifference, linework = false))
+    call("st_difference_sr", a, b, scale)
   def st_symdifference_sr(a: Column, b: Column, scale: Column): Column =
-    col(StBooleanSr(x(a), x(b), x(scale), graft.kernels.Overlay.OpXor, linework = false))
+    call("st_symdifference_sr", a, b, scale)
   def st_intersection_sr_lines(a: Column, b: Column, scale: Column): Column =
-    col(StBooleanSr(x(a), x(b), x(scale), graft.kernels.Overlay.OpIntersection, linework = true))
+    call("st_intersection_sr_lines", a, b, scale)
   def st_union_sr_lines(a: Column, b: Column, scale: Column): Column =
-    col(StBooleanSr(x(a), x(b), x(scale), graft.kernels.Overlay.OpUnion, linework = true))
+    call("st_union_sr_lines", a, b, scale)
   def st_difference_sr_lines(a: Column, b: Column, scale: Column): Column =
-    col(StBooleanSr(x(a), x(b), x(scale), graft.kernels.Overlay.OpDifference, linework = true))
+    call("st_difference_sr_lines", a, b, scale)
   def st_symdifference_sr_lines(a: Column, b: Column, scale: Column): Column =
-    col(StBooleanSr(x(a), x(b), x(scale), graft.kernels.Overlay.OpXor, linework = true))
+    call("st_symdifference_sr_lines", a, b, scale)
   /** Dissolve: n-way union of a group's geometries as a REAL partial
     * aggregate (TypedImperativeAggregate): per-partition partial
     * unions, merged by pairwise union — per-task memory is O(batch +
@@ -331,53 +309,53 @@ object functions {
     col(StUnionAgg(x(g)).toAggregateExpression())
 
   // relate (DE-9IM)
-  def st_relate(a: Column, b: Column): Column = col(StRelate(x(a), x(b)))
+  def st_relate(a: Column, b: Column): Column = call("st_relate", a, b)
   def st_relatematch(a: Column, b: Column, pattern: Column): Column =
-    col(StRelateMatch(x(a), x(b), x(pattern)))
-  def st_touches(a: Column, b: Column): Column = col(StTouches(x(a), x(b)))
-  def st_crosses(a: Column, b: Column): Column = col(StCrosses(x(a), x(b)))
-  def st_overlaps(a: Column, b: Column): Column = col(StOverlaps(x(a), x(b)))
-  def st_covers(a: Column, b: Column): Column = col(StCovers(x(a), x(b)))
-  def st_coveredby(a: Column, b: Column): Column = col(StCoveredBy(x(a), x(b)))
-  def st_equals(a: Column, b: Column): Column = col(StEqualsTopo(x(a), x(b)))
+    call("st_relatematch", a, b, pattern)
+  def st_touches(a: Column, b: Column): Column = call("st_touches", a, b)
+  def st_crosses(a: Column, b: Column): Column = call("st_crosses", a, b)
+  def st_overlaps(a: Column, b: Column): Column = call("st_overlaps", a, b)
+  def st_covers(a: Column, b: Column): Column = call("st_covers", a, b)
+  def st_coveredby(a: Column, b: Column): Column = call("st_coveredby", a, b)
+  def st_equals(a: Column, b: Column): Column = call("st_equals", a, b)
 
   // shapes
-  def st_concavehull(g: Column, concavity: Column): Column = col(StConcaveHull(x(g), x(concavity)))
-  def st_knnconcavehull(g: Column, k: Column): Column = col(StKnnConcaveHull(x(g), x(k)))
-  def st_minrotatedrect(g: Column): Column = col(StMinRotatedRect(x(g)))
-  def st_triangulate(g: Column): Column = col(StTriangulate(x(g)))
+  def st_concavehull(g: Column, concavity: Column): Column = call("st_concavehull", g, concavity)
+  def st_knnconcavehull(g: Column, k: Column): Column = call("st_knnconcavehull", g, k)
+  def st_minrotatedrect(g: Column): Column = call("st_minrotatedrect", g)
+  def st_triangulate(g: Column): Column = call("st_triangulate", g)
   /** Constrained Delaunay for polygonal input, plain Delaunay of the
     * geometry's points otherwise (TriangulateSpade semantics). */
-  def st_delaunay(g: Column): Column = col(StDelaunay(x(g)))
-  def st_delaunay_unconstrained(g: Column): Column = col(StDelaunayUnconstrained(x(g)))
+  def st_delaunay(g: Column): Column = call("st_delaunay", g)
+  def st_delaunay_unconstrained(g: Column): Column = call("st_delaunay_unconstrained", g)
   /** Merge an array of triangles into the MultiPolygon they cover. */
-  def st_stitch(tris: Column): Column = col(StStitch(x(tris)))
-  def st_segmentize(g: Column, n: Column): Column = col(StSegmentize(x(g), x(n)))
-  def st_segmentize_sphere(g: Column, n: Column): Column = col(StSegmentizeSphere(x(g), x(n)))
-  def st_dimension(g: Column): Column = col(StDimension(x(g)))
-  def st_closestpoint_sphere(g: Column, p: Column): Column = col(StClosestPointSphere(x(g), x(p)))
-  def st_distance_vincenty(a: Column, b: Column): Column = col(StDistanceVincenty(x(a), x(b)))
+  def st_stitch(tris: Column): Column = call("st_stitch", tris)
+  def st_segmentize(g: Column, n: Column): Column = call("st_segmentize", g, n)
+  def st_segmentize_sphere(g: Column, n: Column): Column = call("st_segmentize_sphere", g, n)
+  def st_dimension(g: Column): Column = call("st_dimension", g)
+  def st_closestpoint_sphere(g: Column, p: Column): Column = call("st_closestpoint_sphere", g, p)
+  def st_distance_vincenty(a: Column, b: Column): Column = call("st_distance_vincenty", a, b)
 
   // cells
   def st_cellid(level: Column, lon: Column, lat: Column): Column =
-    col(StCellId(x(level), x(lon), x(lat)))
-  def st_cell_of_geom(level: Column, g: Column): Column = col(StCellOfGeom(x(level), x(g)))
-  def st_covering(level: Column, g: Column): Column = col(StCovering(x(level), x(g)))
-  def st_cell_bounds(id: Column): Column = col(StCellBounds(x(id)))
-  def st_cell_parent(id: Column, level: Column): Column = col(StCellParent(x(id), x(level)))
-  def st_cell_level(id: Column): Column = col(StCellLevel(x(id)))
-  def st_cell_x(id: Column): Column = col(StCellX(x(id)))
-  def st_cell_y(id: Column): Column = col(StCellY(x(id)))
-  def st_cell_children(id: Column): Column = col(StCellChildren(x(id)))
+    call("st_cellid", level, lon, lat)
+  def st_cell_of_geom(level: Column, g: Column): Column = call("st_cell_of_geom", level, g)
+  def st_covering(level: Column, g: Column): Column = call("st_covering", level, g)
+  def st_cell_bounds(id: Column): Column = call("st_cell_bounds", id)
+  def st_cell_parent(id: Column, level: Column): Column = call("st_cell_parent", id, level)
+  def st_cell_level(id: Column): Column = call("st_cell_level", id)
+  def st_cell_x(id: Column): Column = call("st_cell_x", id)
+  def st_cell_y(id: Column): Column = call("st_cell_y", id)
+  def st_cell_children(id: Column): Column = call("st_cell_children", id)
   def st_geohash(lon: Column, lat: Column, precision: Column): Column =
-    col(StGeohash(x(lon), x(lat), x(precision)))
-  def st_geohash_rect(h: Column): Column = col(StGeohashRect(x(h)))
-  def st_geohash_neighbors(h: Column): Column = col(StGeohashNeighbors(x(h)))
-  def st_cell_compact(cells: Column): Column = col(StCellCompact(x(cells)))
+    call("st_geohash", lon, lat, precision)
+  def st_geohash_rect(h: Column): Column = call("st_geohash_rect", h)
+  def st_geohash_neighbors(h: Column): Column = call("st_geohash_neighbors", h)
+  def st_cell_compact(cells: Column): Column = call("st_cell_compact", cells)
   def st_cell_uncompact(cells: Column, level: Column): Column =
-    col(StCellUncompact(x(cells), x(level)))
+    call("st_cell_uncompact", cells, level)
   def st_cell_neighborhood(level: Column, lon: Column, lat: Column, ring: Column): Column =
-    col(StCellNeighborhood(x(level), x(lon), x(lat), x(ring)))
+    call("st_cell_neighborhood", level, lon, lat, ring)
 
   // ------------------------------------------------------ aggregates
   // composed from codegen'd built-ins — no custom ImperativeAggregate
@@ -385,7 +363,7 @@ object functions {
 
   /** Collect a group's geometries into one MultiPoint. */
   def st_collect_agg(g: Column): Column =
-    col(StCollectPoints(x(org.apache.spark.sql.functions.collect_list(g))))
+    call("st_collect_points", org.apache.spark.sql.functions.collect_list(g))
 
   /** Convex hull of all geometries in the group — incremental
     * aggregate: the buffer holds only the running hull's vertices (+ a
@@ -414,315 +392,22 @@ object functions {
       spark.experimental.extraOptimizations = existing :+ SpatialJoinRule(level)
   }
 
-  /** Exact-numeric SQL literals (`6.5`) parse as DECIMAL, but no graft
-    * function has a decimal/float parameter — every fractional param is
-    * Double — so coercing decimal/float arguments to double at the
-    * registration boundary is always the intended call. Int/long/string
-    * args pass through untouched (int params stay ints). */
-  private[sql] def coerceArgs(args: Seq[Expression]): Seq[Expression] = args.map {
-    case a if a.resolved && (a.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType]
-        || a.dataType == org.apache.spark.sql.types.FloatType) =>
-      org.apache.spark.sql.catalyst.expressions.Cast(
-        a, org.apache.spark.sql.types.DoubleType)
-    case a => a
-  }
-
   /** Register every st_* function for SQL use. Idempotent. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    def f(name: String, builder: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, args => builder(coerceArgs(args)), "built-in")
-
-    f("st_geomfromtext", e => StGeomFromText(e.head))
-    f("st_geomfromtext_force2d", e => StGeomFromTextForce2D(e.head))
-    f("st_collection_fromtext", e => StCollectionFromText(e.head))
-    f("st_collection_astext", e => StCollectionAsText(e.head))
-    f("st_unary_union", e => StUnaryUnion(e.head))
-    f("st_collection_centroid", e => StCollectionCentroid(e.head))
-    f("st_numparts", e => StNumParts(e.head))
-    f("st_boundary", e => StBoundary(e.head))
-    f("st_polygonize", e => StPolygonize(e.head))
-    f("st_minclearance", e => StMinClearance(e.head))
-    f("st_minclearanceline", e => StMinClearanceLine(e.head))
-    f("st_winnow", e => StWinnowFingerprints(e(0), e(1), e(2)))
-    f("st_astext", e => StAsText(e.head))
-    f("st_geometrytype", e => StGeometryType(e.head))
-    f("st_point", e => StPoint(e(0), e(1)))
-    f("st_makepoint", e => StPoint(e(0), e(1))) // PostGIS alias
-    f("st_rect", e => StRect(e(0), e(1), e(2), e(3)))
-    f("st_area", e => StArea(e.head))
-    f("st_unsigned_area", e => StUnsignedArea(e.head))
-    f("st_sphere_area", e => StSphereArea(e.head))
-    f("st_geodesic_area", e => StGeodesicArea(e.head))
-    f("st_geodesic_area_unsigned", e => StGeodesicAreaUnsigned(e.head))
-    f("st_length", e => StLength(e.head))
-    f("st_length_sphere", e => StLengthSphere(e.head))
-    f("st_length_rhumb", e => StLengthRhumb(e.head))
-    f("st_length_geodesic", e => StLengthGeodesic(e.head))
-    f("st_perimeter", e => StPerimeter(e.head))
-    f("st_numpoints", e => StNumPoints(e.head))
-    f("st_npoints", e => StNumPoints(e.head)) // PostGIS alias
-    f("st_isempty", e => StIsEmpty(e.head))
-    f("st_isccw", e => StIsCcw(e.head))
-    f("st_isconvex", e => StIsConvex(e.head))
-    f("st_windingorder", e => StWindingOrder(e.head))
-    f("st_xmin", e => StXMin(e.head))
-    f("st_ymin", e => StYMin(e.head))
-    f("st_xmax", e => StXMax(e.head))
-    f("st_ymax", e => StYMax(e.head))
-    f("st_x", e => StX(e.head))
-    f("st_y", e => StY(e.head))
-    f("st_extremes", e => StExtremes(e.head))
-    f("st_centroid", e => StCentroid(e.head))
-    f("st_envelope", e => StEnvelope(e.head))
-    f("st_interiorpoint", e => StInteriorPoint(e.head))
-    f("st_convexhull", e => StConvexHull(e.head))
-    f("st_grahamhull", e => StGrahamHull(e(0), e(1)))
-    f("st_buffer", e => if (e.length >= 3) StBufferStyle(e(0), e(1), e(2)) else StBuffer(e(0), e(1)))
-    f("st_voronoi", e => if (e.length >= 5) StVoronoiClip(e.take(5)) else StVoronoi(e.head))
-    f("st_subdivide", e => StSubdivide(e(0), e(1)))
-    f("st_maximuminscribedcircle", e => StMaximumInscribedCircle(e(0), e(1)))
-    f("st_linemerge", e => StLineMerge(e.head))
-    f("st_offsetcurve", e => StOffsetCurve(e(0), e(1)))
-    f("st_makevalid", e => StMakeValid(e.head))
-    f("st_shortestline", e => StShortestLine(e(0), e(1)))
-    f("st_snap", e => StSnap(e(0), e(1), e(2)))
-    f("st_split", e => StSplit(e(0), e(1)))
-    f("st_linesubstring", e => StLineSubstring(e(0), e(1), e(2)))
-    f("st_reverse", e => StReverse(e.head))
-    f("st_normalize", e => StNormalize(e.head))
-    f("st_exteriorring", e => StExteriorRing(e.head))
-    f("st_numinteriorrings", e => StNumInteriorRings(e.head))
-    f("st_interiorringn", e => StInteriorRingN(e(0), e(1)))
-    f("st_pointn", e => StPointN(e(0), e(1)))
-    f("st_startpoint", e => StStartPoint(e.head))
-    f("st_endpoint", e => StEndPoint(e.head))
-    f("st_geometryn", e => StGeometryN(e(0), e(1)))
-    f("st_dumprings", e => StDumpRings(e.head))
-    f("st_maxdistance", e => StMaxDistance(e(0), e(1)))
-    f("st_longestline", e => StLongestLine(e(0), e(1)))
-    f("st_makeline", e => StMakeLine(e.head))
-    f("st_flipcoordinates", e => StFlipCoordinates(e.head))
-    f("st_isclosed", e => StIsClosed(e.head))
-    f("st_issimple", e => StIsSimple(e.head))
-    f("st_isring", e => StIsRing(e.head))
-    f("st_multi", e => StMulti(e.head))
-    f("st_points", e => StPoints(e.head))
-    f("st_boundingdiagonal", e => StBoundingDiagonal(e.head))
-    f("st_scroll", e => StScroll(e(0), e(1)))
-    f("st_shift_longitude", e => StShiftLongitude(e.head))
-    f("st_minimumboundingcircle", e =>
-      StMinimumBoundingCircle(e(0), if (e.length > 1) e(1) else Literal(48)))
-    f("st_minimumboundingradius", e => StMinimumBoundingRadius(e.head))
-    f("st_sharedpaths", e => StSharedPaths(e(0), e(1)))
-    f("st_linecrossingdirection", e => StLineCrossingDirection(e(0), e(1)))
-    f("st_hexbin", e => StHexBin(e(0), e(1), e(2)))
-    f("st_hexbin_center", e => StHexBinCenter(e(0), e(1), e(2)))
-    f("st_hexagon", e => StHexagon(e(0), e(1), e(2)))
-    f("st_tileenvelope", e => StTileEnvelope(e(0), e(1), e(2),
-      if (e.length > 3) e(3) else Literal(0.0)))
-    f("st_asmvtgeom", e => StAsMvtGeom(Seq(e(0), e(1), e(2), e(3),
-      if (e.length > 4) e(4) else Literal(4096),
-      if (e.length > 5) e(5) else Literal(256),
-      if (e.length > 6) e(6) else Literal(true))))
-    f("st_squaregrid", e => StSquareGrid(e(0), e(1)))
-    f("st_squaregrid_cell", e => StSquareGridCell(e(0), e(1), e(2)))
-    f("st_asmvt", e => StAsMvtAgg(e(0), e(1),
-      if (e.length > 4) Some(e(4)) else None,
-      if (e.length > 2) e(2).eval().toString else "layer",
-      if (e.length > 3) e(3).eval().asInstanceOf[Int] else 4096)
-      .toAggregateExpression())
-    f("st_mvt_decode", e => StMvtDecode(e.head))
-    f("st_mvt_layername", e => StMvtLayerName(e.head))
-    f("st_mvt_extent", e => StMvtExtent(e.head))
-    f("st_geometricmedian", e => StGeometricMedian(e(0),
-      if (e.length > 1) e(1) else Literal(0.0),
-      if (e.length > 2) e(2) else Literal(10000)))
-    f("st_generatepoints", e => StGeneratePoints(e(0), e(1),
-      if (e.length > 2) e(2) else Literal(0L)))
-    f("st_hexdistance", e => StHexDistance(e(0), e(1), e(2), e(3)))
-    f("st_hexring", e => StHexRing(e(0), e(1), e(2)))
-    f("st_quadkey", e => StQuadkey(e(0), e(1), e(2)))
-    f("st_quadkey_decode", e => StQuadkeyDecode(e.head))
-    f("st_lineinterpolatepoints", e => StLineInterpolatePoints(e(0), e(1)))
-    f("st_addpoint", e => StAddPoint(e(0), e(1), e(2)))
-    f("st_setpoint", e => StSetPoint(e(0), e(1), e(2)))
-    f("st_removepoint", e => StRemovePoint(e(0), e(1)))
-    f("st_angle", e => StAngle(e(0), e(1), e(2)))
-    f("st_expand", e => StExpand(e(0), e(1)))
-    f("st_node", e => StNode(e.head))
-    f("st_largestemptycircle", e => StLargestEmptyCircle(e(0), e(1)))
-    f("st_simplify", e => StSimplify(e(0), e(1)))
-    f("st_simplifyvw", e => StSimplifyVw(e(0), e(1)))
-    f("st_simplify_idx", e => StSimplifyIdx(e(0), e(1)))
-    f("st_simplifyvw_idx", e => StSimplifyVwIdx(e(0), e(1)))
-    f("st_densify", e => StDensify(e(0), e(1)))
-    f("st_densify_haversine", e => StDensifyHaversine(e(0), e(1)))
-    f("st_densify_rhumb", e => StDensifyRhumb(e(0), e(1)))
-    f("st_densify_geodesic", e => StDensifyGeodesic(e(0), e(1)))
-    f("st_chaikin", e => StChaikin(e(0), e(1)))
-    f("st_removerepeated", e => StRemoveRepeated(e.head))
-    f("st_toradians", e => StToRadians(e.head))
-    f("st_todegrees", e => StToDegrees(e.head))
-    f("st_force_cw", e => StForceCw(e.head))
-    f("st_force_ccw", e => StForceCcw(e.head))
-    f("st_dumppoints", e => StDumpPoints(e.head))
-    f("st_dumpsegments", e => StDumpSegments(e.head))
-    f("st_lineintersection", e => StLineIntersection(e(0), e(1)))
-    f("st_closestpoint", e => StClosestPoint(e(0), e(1)))
-    f("st_affine", e => StAffine(e))
-    f("st_translate", e => StTranslate(e(0), e(1), e(2)))
-    f("st_rotate", e => StRotate(e(0), e(1)))
-    f("st_scale", e => StScale(e(0), e(1), e(2)))
-    f("st_skew", e => StSkew(e(0), e(1), e(2)))
-    f("st_contains", e => StContains(e(0), e(1)))
-    f("st_within", e => StWithin(e(0), e(1)))
-    f("st_intersects", e => StIntersects(e(0), e(1)))
-    f("st_disjoint", e => StDisjoint(e(0), e(1)))
-    f("st_contains_xy", e => StContainsXY(e(0), e(1), e(2)))
-    f("st_intersects_xy", e => StIntersectsXY(e(0), e(1), e(2)))
-    f("st_distance", e => StDistance(e(0), e(1)))
-    f("st_distance_sphere", e => StDistanceSphere(e(0), e(1)))
-    f("st_distance_rhumb", e => StDistanceRhumb(e(0), e(1)))
-    f("st_distance_geodesic", e => StDistanceGeodesic(e(0), e(1)))
-    f("st_azimuth", e => StAzimuth(e(0), e(1)))
-    f("st_bearing", e => StBearing(e(0), e(1)))
-    f("st_bearing_rhumb", e => StBearingRhumb(e(0), e(1)))
-    f("st_bearing_geodesic", e => StBearingGeodesic(e(0), e(1)))
-    f("st_project", e => StProject(e(0), e(1), e(2)))
-    f("st_project_rhumb", e => StProjectRhumb(e(0), e(1), e(2)))
-    f("st_project_geodesic", e => StProjectGeodesic(e(0), e(1), e(2)))
-    f("st_crosstrack", e => StCrossTrack(e(0), e(1), e(2)))
-    f("st_hausdorff", e => StHausdorff(e(0), e(1)))
-    f("st_frechet", e => StFrechet(e(0), e(1)))
-    f("st_linelocatepoint", e => StLineLocatePoint(e(0), e(1)))
-    f("st_lineinterpolatepoint", e => StLineInterpolatePoint(e(0), e(1)))
-    f("st_lineinterpolate_sphere", e => StLineInterpolateSphere(e(0), e(1), e(2)))
-    f("st_lineinterpolate_rhumb", e => StLineInterpolateRhumb(e(0), e(1), e(2)))
-    f("st_lineinterpolate_geodesic", e => StLineInterpolateGeodesic(e(0), e(1), e(2)))
-    f("st_collect_points", e => StCollectPoints(e.head))
-    f("st_geomfromwkb", e => StGeomFromWkb(e.head))
-    f("st_geomfromwkb_force2d", e => StGeomFromWkbForce2D(e.head))
-    f("st_asgeojson", e => StAsGeoJson(e.head))
-    f("st_geomfromgeojson", e => StGeomFromGeoJson(e.head))
-    f("st_aswkb", e => StAsWkb(e.head))
-    f("st_geomfromewkb", e => StGeomFromWkb(e.head))
-    f("st_asewkb", e => StAsEwkb(e(0), e(1)))
-    f("st_srid", e => StSrid(e.head))
-    f("st_isvalid", e => StIsValid(e.head))
-    f("st_isvalidreason", e => StIsValidReason(e.head))
-    f("st_simplifyvw_preserve", e => StSimplifyVwPreserve(e(0), e(1)))
-    f("st_intersection", e => StIntersection(e(0), e(1)))
-    f("st_union", e => StUnion(e(0), e(1)))
-    f("st_difference", e => StDifference(e(0), e(1)))
-    f("st_symdifference", e => StSymDifference(e(0), e(1)))
-    f("st_intersection_hetero", e => StOverlayHetero(e(0), e(1), graft.kernels.Overlay.OpIntersection))
-    f("st_union_hetero", e => StOverlayHetero(e(0), e(1), graft.kernels.Overlay.OpUnion))
-    f("st_difference_hetero", e => StOverlayHetero(e(0), e(1), graft.kernels.Overlay.OpDifference))
-    f("st_symdifference_hetero", e => StOverlayHetero(e(0), e(1), graft.kernels.Overlay.OpXor))
-    f("st_clip", e => StClip(e(0), e(1), e(2)))
-    f("st_transform", e => StTransform(e(0), e(1), e(2)))
-    f("st_snap_to_grid", e => StSnapToGrid(e(0), e(1)))
-    f("st_intersection_sr", e => StBooleanSr(e(0), e(1), e(2), graft.kernels.Overlay.OpIntersection, linework = false))
-    f("st_union_sr", e => StBooleanSr(e(0), e(1), e(2), graft.kernels.Overlay.OpUnion, linework = false))
-    f("st_difference_sr", e => StBooleanSr(e(0), e(1), e(2), graft.kernels.Overlay.OpDifference, linework = false))
-    f("st_symdifference_sr", e => StBooleanSr(e(0), e(1), e(2), graft.kernels.Overlay.OpXor, linework = false))
-    f("st_intersection_sr_lines", e => StBooleanSr(e(0), e(1), e(2), graft.kernels.Overlay.OpIntersection, linework = true))
-    f("st_union_sr_lines", e => StBooleanSr(e(0), e(1), e(2), graft.kernels.Overlay.OpUnion, linework = true))
-    f("st_difference_sr_lines", e => StBooleanSr(e(0), e(1), e(2), graft.kernels.Overlay.OpDifference, linework = true))
-    f("st_symdifference_sr_lines", e => StBooleanSr(e(0), e(1), e(2), graft.kernels.Overlay.OpXor, linework = true))
-    f("st_union_all", e => StUnionAll(e.head))
-    f("st_relate", e => StRelate(e(0), e(1)))
-    f("st_relatematch", e => StRelateMatch(e(0), e(1), e(2)))
-    f("st_touches", e => StTouches(e(0), e(1)))
-    f("st_crosses", e => StCrosses(e(0), e(1)))
-    f("st_overlaps", e => StOverlaps(e(0), e(1)))
-    f("st_covers", e => StCovers(e(0), e(1)))
-    f("st_coveredby", e => StCoveredBy(e(0), e(1)))
-    f("st_equals", e => StEqualsTopo(e(0), e(1)))
-    f("st_concavehull", e => StConcaveHull(e(0), e(1)))
-    f("st_knnconcavehull", e => StKnnConcaveHull(e(0), e(1)))
-    f("st_minrotatedrect", e => StMinRotatedRect(e.head))
-    f("st_triangulate", e => StTriangulate(e.head))
-    f("st_delaunay", e => StDelaunay(e.head))
-    f("st_delaunay_unconstrained", e => StDelaunayUnconstrained(e.head))
-    f("st_stitch", e => StStitch(e.head))
-    f("st_segmentize", e => StSegmentize(e(0), e(1)))
-    f("st_segmentize_sphere", e => StSegmentizeSphere(e(0), e(1)))
-    f("st_dimension", e => StDimension(e.head))
-    f("st_closestpoint_sphere", e => StClosestPointSphere(e(0), e(1)))
-    f("st_distance_vincenty", e => StDistanceVincenty(e(0), e(1)))
-    f("st_cellid", e => StCellId(e(0), e(1), e(2)))
-    f("st_cell_of_geom", e => StCellOfGeom(e(0), e(1)))
-    f("st_covering", e => StCovering(e(0), e(1)))
-    f("st_cell_bounds", e => StCellBounds(e.head))
-    f("st_cell_parent", e => StCellParent(e(0), e(1)))
-    f("st_cell_level", e => StCellLevel(e.head))
-    f("st_cell_x", e => StCellX(e.head))
-    f("st_cell_y", e => StCellY(e.head))
-    f("st_cell_children", e => StCellChildren(e.head))
-    f("st_geohash", e => StGeohash(e(0), e(1), e(2)))
-    f("st_geohash_rect", e => StGeohashRect(e.head))
-    f("st_geohash_neighbors", e => StGeohashNeighbors(e.head))
-    f("st_cell_compact", e => StCellCompact(e.head))
-    f("st_cell_uncompact", e => StCellUncompact(e(0), e(1)))
-    f("st_cell_neighborhood", e => StCellNeighborhood(e(0), e(1), e(2), e(3)))
-    // SQL macros over built-in catalyst expressions (no custom
-    // Expression needed): PII redaction and host extraction for SQL
-    // users, sharing the exact pattern constants with the Column API
-    import org.apache.spark.sql.catalyst.expressions.{Literal => L, RegExpReplace, RegExpExtract, Lower}
-    f("st_redact_pii", e =>
-      RegExpReplace(
-        RegExpReplace(
-          RegExpReplace(e.head,
-            L(graft.operators.TrainingData.EmailPattern), L("<EMAIL>")),
-          L(graft.operators.TrainingData.IpPattern), L("$1<IP>$4")),
-        L(graft.operators.TrainingData.PhonePattern), L("$1<PHONE>$4")))
-    f("st_host", e =>
-      Lower(RegExpExtract(e.head,
-        L(graft.operators.TrainingData.HostPattern), L(1))))
+    for (f <- Catalogue.all; name <- f.names)
+      reg.createOrReplaceTempFunction(name, f(_), "built-in")
   }
 }
 
 /** SparkSessionExtensions entry point:
-  * `.config("spark.sql.extensions", "graft.sql.GraftExtensions")`. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    def inject(name: String, builder: Seq[Expression] => Expression): Unit =
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo("graft.sql", name),
-        args => builder(functions.coerceArgs(args))))
-    // the spatial-join rewrites (PIP / ST_DWithin / geometry pairs →
-    // cell equi-joins) ride along for any session built with
-    // spark.sql.extensions — not just register()-style sessions
+  * `.config("spark.sql.extensions", "graft.sql.GraftExtensions")`.
+  * Injects every st_* function of [[Catalogue]] and the spatial-join
+  * rewrites (PIP / ST_DWithin / geometry pairs → cell equi-joins). */
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => SpatialJoinRule())
-    // the session-level register() covers the full surface; inject the
-    // core set here for sessions built with withExtensions
-    inject("st_geomfromtext", e => StGeomFromText(e.head))
-    inject("st_collection_fromtext", e => StCollectionFromText(e.head))
-    inject("st_collection_astext", e => StCollectionAsText(e.head))
-    inject("st_unary_union", e => StUnaryUnion(e.head))
-    inject("st_numparts", e => StNumParts(e.head))
-    inject("st_boundary", e => StBoundary(e.head))
-    inject("st_polygonize", e => StPolygonize(e.head))
-    inject("st_minclearance", e => StMinClearance(e.head))
-    inject("st_minclearanceline", e => StMinClearanceLine(e.head))
-    inject("st_astext", e => StAsText(e.head))
-    inject("st_point", e => StPoint(e(0), e(1)))
-    inject("st_contains", e => StContains(e(0), e(1)))
-    inject("st_intersects", e => StIntersects(e(0), e(1)))
-    inject("st_area", e => StArea(e.head))
-    inject("st_centroid", e => StCentroid(e.head))
-    inject("st_cellid", e => StCellId(e(0), e(1), e(2)))
-    inject("st_covering", e => StCovering(e(0), e(1)))
-    // the full join-predicate surface the optimizer rule rewrites
-    inject("st_distance", e => StDistance(e(0), e(1)))
-    inject("st_contains_xy", e => StContainsXY(e(0), e(1), e(2)))
-    inject("st_intersects_xy", e => StIntersectsXY(e(0), e(1), e(2)))
-    inject("st_within", e => StWithin(e(0), e(1)))
-    inject("st_covers", e => StCovers(e(0), e(1)))
-    inject("st_coveredby", e => StCoveredBy(e(0), e(1)))
+    for (f <- Catalogue.all; name <- f.names)
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo("graft.sql", name), f(_)))
   }
 }

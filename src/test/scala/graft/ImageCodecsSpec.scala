@@ -220,6 +220,34 @@ class ImageCodecsSpec extends AnyFunSuite {
     }
   }
 
+  test("forged PNG/GIF dimensions fail typed, before any large allocation") {
+    def be32(v: Int): Array[Byte] = java.nio.ByteBuffer.allocate(4).putInt(v).array()
+    def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
+      val t = typ.getBytes("US-ASCII")
+      val crc = new java.util.zip.CRC32
+      crc.update(t); crc.update(data)
+      be32(data.length) ++ t ++ data ++ be32(crc.getValue.toInt)
+    }
+    // valid signature, IHDR and CRCs; 11 bytes of IDAT; 68 bytes in all
+    def png(w: Int, h: Int, colorType: Int): Array[Byte] =
+      Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte) ++
+        chunk("IHDR", be32(w) ++ be32(h) ++ Array[Byte](8, colorType.toByte, 0, 0, 0)) ++
+        chunk("IDAT", Array.fill[Byte](11)(0)) ++ chunk("IEND", Array.emptyByteArray)
+    def le16(v: Int): Array[Byte] = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
+    def gif(w: Int, h: Int): Array[Byte] =
+      "GIF89a".getBytes("US-ASCII") ++ le16(w) ++ le16(h) ++ Array[Byte](0x80.toByte, 0, 0) ++
+        Array.fill[Byte](6)(0) ++ Array[Byte](0x2c) ++ le16(0) ++ le16(0) ++ le16(w) ++ le16(h) ++
+        Array[Byte](0, 2, 2, 0x44, 0x01, 0, 0x3b)
+    // RGBA 30000 x 23000: h * (1 + 4w) overflows Int (was NegativeArraySizeException)
+    // RGB 20000 x 20000: a 1.2 GB pixel buffer from 68 bytes (was OOM)
+    for ((name, bytes) <- Seq("png rgba" -> png(30000, 23000, 6), "png rgb" -> png(20000, 20000, 2),
+        "gif" -> gif(20000, 20000))) {
+      if (name.startsWith("png")) assert(bytes.length == 68, name)
+      val e = intercept[IllegalArgumentException](ImageCodecs.decode(bytes))
+      assert(e.getMessage.contains("exceed the payload"), s"$name: ${e.getMessage}")
+    }
+  }
+
   test("truncated payloads and unknown magic fail loudly") {
     val good = ImageCodecs.encodePpm(img(4, 4))
     intercept[IllegalArgumentException] {

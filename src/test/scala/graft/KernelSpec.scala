@@ -1082,6 +1082,12 @@ class ValidationSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(Wkt.write(Wkt.readForce2D("POINT Z (1 2 3)")) == "POINT(1 2)")
     assert(Wkt.write(Wkt.readForce2D("POINT(1 2 3)")) == "POINT(1 2)")
     assert(Wkt.write(Wkt.readForce2D("POINT ZM (1 2 3 4)")) == "POINT(1 2)")
+    // but only the ordinates the dimension token declares: one for Z,
+    // M or the bare XYZ spelling, two for ZM
+    for (bad <- Seq("POINT Z (1 2 3 4)", "POINT M (1 2 3 4)", "POINT (1 2 3 4)",
+        "LINESTRING Z (0 0 1 9, 1 1 1 9)", "POINT ZM (1 2 3 4 5)"))
+      assert(intercept[IllegalArgumentException](Wkt.readForce2D(bad))
+        .getMessage.contains("coordinates"), bad)
     assert(Wkt.write(Wkt.readForce2D("LINESTRING Z (0 0 5, 1 1 6, 2 0 7)")) ==
       "LINESTRING(0 0,1 1,2 0)")
     assert(Wkt.write(Wkt.readForce2D("POLYGON Z ((0 0 1,4 0 1,4 4 1,0 0 1))")) ==

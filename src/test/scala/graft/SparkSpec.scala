@@ -1513,20 +1513,9 @@ class MultimodalSpec extends org.scalatest.funsuite.AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import org.apache.spark.sql.functions._
 
-  test("multimodal plumbing: schema, features, resize, frame sampling") {
+  test("multimodal plumbing: schema, frame sampling") {
     val media = operators.Multimodal.syntheticMedia(spark, 300)
     assert(media.schema.fieldNames.toSeq == Seq("media_id", "kind", "payload", "meta"))
-    // features: one vector per row, deterministic across runs
-    val f1 = operators.Multimodal.extractFeatures(media, dims = 16)
-    val f2 = operators.Multimodal.extractFeatures(media.repartition(7), dims = 16)
-    val m1 = f1.collect().map(r => r.getLong(0) -> r.getSeq[Float](2)).toMap
-    val m2 = f2.collect().map(r => r.getLong(0) -> r.getSeq[Float](2)).toMap
-    assert(m1.size == 300 && m1 == m2) // parallelism-independent
-    assert(m1.values.forall(_.length == 16))
-    // resize only touches images and rewrites metadata
-    val rs = operators.Multimodal.resizeImages(media, 64, 64)
-    assert(rs.select("kind").distinct().collect().map(_.getString(0)).toSeq == Seq("image"))
-    assert(rs.select("meta.width").distinct().head().getInt(0) == 64)
     // frame sampling explodes videos into n rows
     val fr = operators.Multimodal.sampleFrames(media, 4)
     val perVid = fr.groupBy("media_id").count().agg(max("count"), min("count")).head()
